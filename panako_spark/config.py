@@ -15,7 +15,7 @@ image sizes, and documented as such.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -93,31 +93,6 @@ class PanakoConfig:
     # measured identical recall/precision to uncapped (sweep pinned in
     # test_parity_scale.py) at -17% print volume.
     rescue_max_peaks: int = 32
-    # Which tiles may take the dense re-pick when starved:
-    #   "always" — any starved tile (including tiles of normal images)
-    #   "parent" — only tiles of images whose FULL pick was rescued
-    #   "never"  — tiles always use the standard windows
-    # Tiles dominate probe volume (~6x the full-print volume), so this
-    # knob controls most of the rescue's probe-side join cost. Measured
-    # at 642 images: "always" buys exactly ONE extra DIRECT pair over
-    # "never" (a crop dup x contain dup of the same base) at 2.3x tile
-    # probe volume — and that pair's images are already co-clustered
-    # through their shared base, so the CLUSTER assignment (the dedup
-    # deliverable, and the reference's query-finds-original contract)
-    # is bit-identical between the modes: closure recall 0.9969 /
-    # closure out-of-clique 38-39 both ways. "never" ships. (The
-    # INDEX-side twin of this decision — dense rescue extras are
-    # landmark-channel-only — lives in prints_with_rescue's n_std
-    # split; BENCH/ATTRIBUTION.md "Fix 5" has the full measured arc.)
-    # Sweep + closure metrics pinned in test_parity_scale.py.
-    tile_rescue_mode: str = "never"
-    # Starvation floor for TILE picks when tile_rescue_mode allows
-    # dense tiles ("always"/"parent"; inert under "never"). Tiles are
-    # image slices, so at the full-image floor of 130 a quarter of ALL
-    # tiles fire the dense re-pick; lowering this below 130 measurably
-    # loses the one contain-dup pair that dense tiles exist to catch,
-    # so there is no useful middle setting — hence the mode knob above.
-    tile_rescue_floor: int = 130
     # Precision guard for the rescue: dense prints align spuriously
     # more often, so a landmark/tile pair with a rescued side ships
     # only if it clears rescue_strong_score on alignment alone, OR
@@ -209,7 +184,12 @@ class PanakoConfig:
     # 642-image parity corpus that gate admits 4 extra true crop pairs
     # and 0 false ones (truth recall 0.972 -> 0.985). Tile prints are
     # query-time ephemera computed in the same decode pass; the stored
-    # print format is unchanged.
+    # print format is unchanged. Tiles always take the standard peak
+    # windows, never the print rescue's dense re-pick: measured at 642
+    # images, dense tiles bought one extra DIRECT pair (whose images
+    # were already co-clustered through their shared base, so cluster
+    # assignment was bit-identical) at 2.3x tile probe volume
+    # (BENCH/ATTRIBUTION.md "Fix 5").
     tile_rescue: bool = True
     tile_probe_offsets: tuple = (0.0, 0.05, 0.10, 0.15)
     tile_probe_heights: tuple = (0.87, 0.93)
@@ -290,31 +270,12 @@ class PanakoConfig:
     # ---- execution ------------------------------------------------------------
     shuffle_partitions: int = 32
     arrow_batch_rows: int = 256
-    # Probe-side pre-filter for the two ±range/exact probe joins
-    # (candidates.landmark_hits / tile_hits): "semi" drops probe rows
-    # whose key matches NO stored hash with a broadcast left-semi join
-    # against the distinct store-hash set BEFORE the probe exchange —
-    # the DataFrame-API form of Spark's own runtime-filter rewrite.
-    # Result-exact (on/off equivalence test), and 48-56% of probe rows
-    # do match nothing (tools/probe_rate_measure.py) — but REJECTED ON
-    # MEASUREMENT as the default: at 69.7k images the distinct store-
-    # hash set is ~25M keys, the broadcast hash relation falls far out
-    # of cache, and the per-row latency-bound map probe costs more than
-    # the bandwidth-bound exchange volume it saves at BOTH parallelism
-    # levels (pinned local[2] 2409->3040 s, local[8] 786->885 s; full
-    # analysis in BENCH/ATTRIBUTION.md "Fix 4"). Worth revisiting only
-    # with a cache-resident filter (bloom/prefix set) on an engine that
-    # exposes a JVM-side probe expression; "none" is the default.
-    probe_prefilter: str = "none"
 
     def __post_init__(self):
         if self.strategy not in ("panako", "olaf"):
             raise ValueError(
                 f"strategy must be 'panako' or 'olaf', got "
                 f"{self.strategy!r}")
-        if self.probe_prefilter not in ("semi", "none"):
-            raise ValueError("probe_prefilter must be 'semi' or 'none', "
-                             f"got {self.probe_prefilter!r}")
         if self.olaf_eps_per_fp not in (2, 3):
             raise ValueError("olaf_eps_per_fp must be 2 or 3 "
                              "(Key.java:227)")
@@ -348,9 +309,8 @@ class PanakoConfig:
             "log_fmin_bin", "max_filter_freq", "max_filter_time",
             "min_peak_magnitude", "max_peaks_per_image",
             "print_rescue_floor", "peak_rescue_freq", "peak_rescue_time",
-            "rescue_max_peaks", "tile_rescue_mode", "tile_rescue_floor",
-            "min_time_distance", "max_time_distance", "min_freq_distance",
-            "max_freq_distance", "max_prints_per_image",
+            "rescue_max_peaks", "min_time_distance", "max_time_distance",
+            "min_freq_distance", "max_freq_distance", "max_prints_per_image",
             "strategy", "olaf_eps_per_fp",
             "minhash_perms", "minhash_bands", "minhash_shingle",
             "minhash_seed", "simhash_bits", "simhash_bands",

@@ -211,15 +211,16 @@ class CheckpointStore:
         """Refuse to mix fingerprint formats in one store: appending
         prints extracted under a different extractor config (e.g.
         log_freq toggled — every landmark hash moves) would silently
-        produce a store whose cross-boundary pairs never match."""
+        produce a store whose cross-boundary pairs never match, and
+        resuming on them would return pairs a fresh run would not."""
         stored = self.manifest(table).get("config_fp")
         if stored is not None and stored != config_fp:
             raise ValueError(
                 f"checkpoint table '{table}' was written with extractor "
                 f"config {stored}, current config is {config_fp}; "
                 "re-extract the store (store.invalidate + full run) or "
-                "restore the original config — appending would mix "
-                "incompatible fingerprint formats.")
+                "restore the original config — reusing or appending "
+                "would mix incompatible fingerprint formats.")
 
     def invalidate(self, table: str) -> None:
         p = self._manifest_path(table)

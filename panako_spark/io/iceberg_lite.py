@@ -739,76 +739,6 @@ class IcebergLiteTable:
         _, manifests, _ = avro_lite.read_container(snap["manifest-list"])
         return manifests
 
-    def delete_matching_ids(self, id_col: str, ids: list) -> dict:
-        """Copy-on-write row-level DELETE: rewrite ONLY the data files
-        that contain matching rows; every untouched file carries
-        forward as an EXISTING entry without being read in full or
-        moved. Returns {files_scanned, files_rewritten, files_dropped,
-        rows_deleted} (the disclosure half of never-silent-drops)."""
-        return self._retrying(self._do_delete, id_col, set(ids))
-
-    def _do_delete(self, id_col: str, ids: set) -> dict:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        base = self.current_version()
-        md = self.metadata()
-        seq = md["last-sequence-number"] + 1
-        snapshot_id = self._new_snapshot_id()
-        out_entries: list[dict] = []
-        written: list[str] = []
-        stats = {"files_scanned": 0, "files_rewritten": 0,
-                 "files_dropped": 0, "rows_deleted": 0}
-        for e in self.live_entries():
-            path = e["data_file"]["file_path"]
-            stats["files_scanned"] += 1
-            # prune on the id column alone (a real engine would consult
-            # the manifest's column bounds first; same shape)
-            col = pq.read_table(path, columns=[id_col])[id_col]
-            vals = pa.array(sorted(ids),
-                            type=col.type.value_type
-                            if pa.types.is_dictionary(col.type)
-                            else col.type)
-            mask = pc.is_in(col, value_set=vals)
-            n_hit = pc.sum(mask).as_py() or 0
-            if not n_hit:
-                out_entries.append(dict(e, status=EXISTING))
-                continue
-            stats["rows_deleted"] += n_hit
-            full = pq.read_table(path)
-            kept = full.filter(pc.invert(pc.is_in(full[id_col],
-                                                  value_set=vals)))
-            if kept.num_rows == 0:
-                stats["files_dropped"] += 1
-                continue
-            # COW keeps the file's own partition: every row of a data
-            # file shares its bucket, and deletion cannot change it
-            dst = os.path.join(os.path.dirname(path),
-                               f"{uuid.uuid4().hex}-cow.parquet")
-            pq.write_table(kept, dst)
-            written.append(dst)
-            stats["files_rewritten"] += 1
-            out_entries.append(self._entry_for_file(
-                dst, kept.num_rows, ADDED, seq, snapshot_id,
-                e["data_file"]["partition"]))
-        try:
-            manifest = self._write_manifest(out_entries, seq, snapshot_id,
-                                            md)
-            self._commit_snapshot(md, base, [manifest], "delete",
-                                  snapshot_id,
-                                  {"deleted-records":
-                                   str(stats["rows_deleted"])})
-        except BaseException:
-            # this attempt's COW rewrites never became reachable; the
-            # retry recomputes against the NEW snapshot, so drop them
-            # rather than orphaning one set per conflicted attempt
-            for dst in written:
-                with contextlib.suppress(OSError):
-                    os.remove(dst)
-            raise
-        return stats
-
     def delete_matching_df(self, spark: SparkSession, ids_df: DataFrame,
                            id_col: str) -> dict:
         """Distributed copy-on-write DELETE: the ids relation is never

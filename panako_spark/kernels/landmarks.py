@@ -370,8 +370,8 @@ def tile_row_ranges(h: int, cfg: PanakoConfig) -> list[tuple[int, int]]:
 
 
 def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
-    """One raster pass -> (full prints,
-    [(tile_id, hash, t1, f1, tile_rescued), ...], rescued, n_std).
+    """One raster pass -> (full prints, [(tile_id, hash, t1, f1), ...],
+    rescued, n_std).
 
     The per-frame column profiles are computed ONCE; each tile is a
     column slice of that matrix (spectral.column_profiles documents the
@@ -380,14 +380,9 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     second pass over the pixels. Tile prints are query-time ephemera
     for the crop-rescue channel; they never enter the stored print
     format. `rescued` is the FULL-image print-rescue flag
-    (prints_with_rescue) — deliberately not OR'd with per-tile rescue
-    picks, so the flag is computable from the stored prints alone and
-    the golden matcher's store_image computes the identical value
-    without extracting tiles. Each tile additionally carries its OWN
-    rescue flag: a dense-picked tile of an otherwise-normal image
-    aligns spuriously exactly like a rescued image does (measured: two
-    score-12/13 false tile pairs leaked through the image-level flags
-    alone), so the tile channel gates on (image flags OR tile flag)."""
+    (prints_with_rescue); only the full image may take the dense
+    re-pick — tiles always use the standard windows (config.py
+    tile_rescue block has the measured reason)."""
     from panako_spark.kernels.peaks import find_peaks_batch
     from panako_spark.kernels.spectral import (
         column_profiles, spectrograms_sliced,
@@ -408,31 +403,14 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     lms = landmarks_batch(std_peaks, cfg)
 
     rescued = _needs_rescue(lms[0][0].size, cfg.print_rescue_floor, cfg)
-    dense_ok = (cfg.tile_rescue_mode == "always"
-                or (cfg.tile_rescue_mode == "parent" and rescued))
-    needs = [rescued] + [
-        dense_ok and _needs_rescue(lm[0].size, cfg.tile_rescue_floor, cfg)
-        for lm in lms[1:]
-    ]
-    dense_map: dict[int, tuple] = {}
-    needy = [i for i, n in enumerate(needs) if n]
-    if needy:
-        dense_all = find_peaks_batch(
-            stack[needy], cfg,
-            windows=(cfg.peak_rescue_time, cfg.peak_rescue_freq))
-        dense_map = dict(zip(needy, dense_all))
-
-    def finish(idx: int):
-        if needs[idx]:
-            return _apply_rescue(std_peaks[idx], dense_map[idx],
-                                 *lms[idx], cfg)
-        h, t1, f1 = lms[idx]
-        return h, t1, f1, False, h.size
-
-    fh, ft, ff, _, n_std = finish(0)
-    tiles = []
-    for tid in range(len(tile_ranges)):
-        hh, tt, ffq, resc_t, _ = finish(1 + tid)
-        if hh.size:
-            tiles.append((tid, hh, tt, ffq, resc_t))
+    if rescued:
+        dense = find_peaks_batch(
+            stack[:1], cfg,
+            windows=(cfg.peak_rescue_time, cfg.peak_rescue_freq))[0]
+        fh, ft, ff, _, n_std = _apply_rescue(std_peaks[0], dense, *lms[0],
+                                             cfg)
+    else:
+        (fh, ft, ff), n_std = lms[0], lms[0][0].size
+    tiles = [(tid, *lms[1 + tid]) for tid in range(len(tile_ranges))
+             if lms[1 + tid][0].size]
     return (fh, ft, ff), tiles, rescued, n_std

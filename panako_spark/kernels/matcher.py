@@ -14,7 +14,6 @@ from collections import defaultdict
 import numpy as np
 
 from panako_spark.config import PanakoConfig
-from panako_spark.kernels.landmarks import extract_prints
 from panako_spark.kernels.minhash import (
     hash_shingles, jaccard, token_shingles,
 )
@@ -57,12 +56,9 @@ class GoldenMatcher:
             self._phash[image_id] = phash
         return h.size
 
-    def _pair_ok(self, id_a: str, id_b: str, score: int,
-                 extra_rescued: bool = False) -> bool:
-        """The rescue precision guard (pipeline.rescue_gate sibling);
-        extra_rescued marks a dense-picked probe (per-tile flag)."""
-        if not (extra_rescued or self._rescued.get(id_a)
-                or self._rescued.get(id_b)):
+    def _pair_ok(self, id_a: str, id_b: str, score: int) -> bool:
+        """The rescue precision guard (pipeline.rescue_gate sibling)."""
+        if not (self._rescued.get(id_a) or self._rescued.get(id_b)):
             return True
         if score >= self.cfg.rescue_strong_score:
             return True
@@ -177,15 +173,14 @@ class GoldenMatcher:
         for qid, gray in grays.items():
             _, tiles, _resc, _n_std = extract_prints_with_tiles(gray,
                                                                 self.cfg)
-            for _tid, h, t1, f1, tile_resc in tiles:
+            for _tid, h, t1, f1 in tiles:
                 for rid, res in self.query_prints(
                         h, t1, f1, avoid={qid},
                         hot_cap=self.cfg.hash_max_images,
                         query_range=self.cfg.tile_query_range,
                         std_index_only=True, verify_cfg=vcfg).items():
                     if res.score >= self.cfg.tile_min_score \
-                            and self._pair_ok(qid, rid, res.score,
-                                              extra_rescued=tile_resc):
+                            and self._pair_ok(qid, rid, res.score):
                         pairs.add((min(qid, rid), max(qid, rid)))
         return pairs
 
@@ -237,7 +232,7 @@ def caption_pairs_golden(captions: dict[str, str], cfg: PanakoConfig):
 def phash_pairs_golden(phashes: dict[str, int], cfg: PanakoConfig
                        ) -> set[tuple[str, str]]:
     """Golden phash channel: >=1 shared band key AND Hamming <= threshold
-    (bit-identical banding to stages/candidates.phash_pairs)."""
+    (bit-identical banding to stages/candidates._phash_band_keys)."""
     bpb = cfg.phash_bits_per_band
     mask = (1 << bpb) - 1
     ids = sorted(phashes)

@@ -83,7 +83,6 @@ def store_incremental(spark: SparkSession, images: DataFrame,
     fp = cfg.extraction_fingerprint()
     have_sig = store.is_complete("signatures")
     iid_offset = 0
-    legacy_no_iid = False
     if have_sig:
         # refuse to append prints extracted under a different config —
         # a mixed-format store's cross-boundary pairs silently never match
@@ -92,22 +91,16 @@ def store_incremental(spark: SparkSession, images: DataFrame,
         existing_sig = store.read(spark, "signatures")
         existing = existing_sig.select("image_id")
         new_images = images.join(existing, "image_id", "left_anti")
-        if "iid" in existing_sig.columns:
-            # shift the new batch's minted ids above the store's max so
-            # appends stay collision-free by construction (one narrow
-            # max() over parquet column stats — cheap)
-            row = existing_sig.agg(F.max("iid").alias("m")).first()
-            iid_offset = int(row["m"]) + 1 if row["m"] is not None else 0
-        else:
-            legacy_no_iid = True  # pre-iid store: keep its schema stable
+        # shift the new batch's minted ids above the store's max so
+        # appends stay collision-free by construction (one narrow max()
+        # over parquet column stats — cheap)
+        row = existing_sig.agg(F.max("iid").alias("m")).first()
+        iid_offset = int(row["m"]) + 1 if row["m"] is not None else 0
     else:
         new_images = images
     # one decode pass feeds the count and both writes (same pattern as
     # pipeline.materialize_extract: never write the nested intermediate)
-    extracted = run_extract(new_images, cfg, iid_offset=iid_offset)
-    if legacy_no_iid:
-        extracted = extracted.drop("iid")
-    extracted = extracted.persist()
+    extracted = run_extract(new_images, cfg, iid_offset=iid_offset).persist()
     try:
         new_prints = split_prints(extracted)
         new_sigs = split_signatures(extracted)

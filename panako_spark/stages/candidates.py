@@ -1,14 +1,14 @@
-"""Candidate generation: four channels, all JVM-side DataFrame ops.
+"""Candidate generation: every channel as JVM-side DataFrame ops.
 
 Channels (SURVEY.md §7 step 5 / north_star):
   landmark  — ±query_range near-hash self-join on the prints table
               (reference Q1, PanakoStorageKV.java:293-379, re-expressed as
               explode(sequence(h-r, h+r)) + equi-join so Catalyst runs a
               plain shuffled hash join instead of a band join)
-  minhash   — LSH band-key explode + salted self-join (hot-band split)
-  simhash   — bit-band keys, same pairing primitive
-  caption_exact / caption_substring — caption hash / winnowed rolling-hash
-              fingerprint keys, same pairing primitive
+  tile      — crop-rescue tile probes against the stored prints
+  minhash / simhash / phash / caption_exact / caption_substring — band or
+              fingerprint keys paired in ONE fused, channel-tagged salted
+              self-join (fused_candidate_pairs)
 
 Skew (north_rule "hot-band splitting"): `pairs_from_keys` counts members
 per key; keys above `band_pair_cap` are split into ceil(n/cap) salted
@@ -83,8 +83,8 @@ def pairs_from_keys(keyed: DataFrame, cap: int,
                     key_col: str = "key", id_col: str = "image_id",
                     caches: list | None = None
                     ) -> tuple[DataFrame, DataFrame]:
-    """Single-channel wrapper over pairs_from_keys_multi (kept for the
-    per-channel API and tests); stats row drops the channel column."""
+    """Single-channel wrapper over pairs_from_keys_multi (the document
+    dedup and PCH operators); stats row drops the channel column."""
     tagged = keyed.withColumn("_ch", F.lit("only"))
     pairs, stats = pairs_from_keys_multi(tagged, cap, group_col="_ch",
                                          key_col=key_col, id_col=id_col,
@@ -153,43 +153,9 @@ def _check_packable(cfg: PanakoConfig) -> None:
             "in stages/candidates.py + stages/verify._unpack_tf")
 
 
-def store_hash_relation(prints: DataFrame) -> DataFrame:
-    """Distinct RAW store hashes — the build side of the probe-side
-    semi pre-filter (cfg.probe_prefilter). Deliberately unfiltered: a
-    superset of any hot-filtered store's hash set is still a correct
-    pre-filter (rows it passes that the real join rejects are merely
-    not-dropped-early), and skipping the hot-hash aggregate keeps this
-    a single-column scan + partial-agg distinct. The caller may persist
-    it and share one relation across the landmark and tile branches."""
-    return prints.select("hash").distinct()
-
-
-def _semi_prefilter(probe: DataFrame, key: str, cfg: PanakoConfig,
-                    store_hashes: DataFrame | None,
-                    prints: DataFrame) -> DataFrame:
-    """Broadcast left-semi probe pre-filter (see cfg.probe_prefilter).
-
-    Map-side: runs BEFORE the probe exchange, so non-matching probe
-    rows (measured 48-56% of the pipeline's widest shuffle) never pay
-    exchange write+read+join. OFF BY DEFAULT — rejected on measurement:
-    at 69.7k images the ~25M-key broadcast hash relation is far larger
-    than cache, and the latency-bound per-row probe cost exceeded the
-    exchange savings at both pinned parallelism levels (local[2]
-    2409->3040 s, local[8] 786->885 s; BENCH/ATTRIBUTION.md "Fix 4").
-    Kept as an option because the plan shape is the right one for an
-    engine with a cache-resident runtime-filter probe (bloom/prefix)."""
-    if cfg.probe_prefilter != "semi":
-        return probe
-    hs = store_hashes if store_hashes is not None \
-        else store_hash_relation(prints)
-    return probe.join(
-        F.broadcast(hs.select(F.col("hash").alias(key))), key, "left_semi")
-
-
 def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
                   numeric_ids: bool = False,
-                  n_images: int | None = None,
-                  store_hashes: DataFrame | None = None) -> DataFrame:
+                  n_images: int | None = None) -> DataFrame:
     """prints -> raw hit list per candidate pair (canonical id_a < id_b).
 
     The ±range probe relation |h_a - h_b| <= query_range is symmetric, so
@@ -203,16 +169,10 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
     every axis (shuffle bytes, sort comparisons, Arrow transfer to the
     verify kernel). The id is the dictionary-encoded `iid` minted at
     ingest (extract.run_extract — unique by construction at any
-    cardinality, id map persisted in the checkpoints); prints written by
-    a pre-iid store fall back to xxhash64(image_id), whose collision
-    guard lives in pipeline.corpus_census.
+    cardinality, id map persisted in the checkpoints).
     """
     p = hot_hash_filter(prints, cfg, n_images=n_images)
-    if numeric_ids:
-        p = p.withColumn("_iid", F.col("iid") if "iid" in prints.columns
-                         else F.xxhash64("image_id"))
-    else:
-        p = p.withColumn("_iid", F.col("image_id"))
+    p = p.withColumn("_iid", F.col("iid" if numeric_ids else "image_id"))
     _check_packable(cfg)
     r = cfg.query_range
     probe = (p.select(
@@ -220,7 +180,6 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
         _pack_half("t1", "f1").alias("_a32"),
         F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
         .alias("probe_hash")))
-    probe = _semi_prefilter(probe, "probe_hash", cfg, store_hashes, prints)
     ref = p.select(F.col("_iid").alias("id_b"),
                    F.col("hash").alias("probe_hash"),
                    _pack_half("t1", "f1").alias("_b32"))
@@ -232,8 +191,7 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
 
 
 def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
-              n_images: int | None = None,
-              store_hashes: DataFrame | None = None) -> DataFrame:
+              n_images: int | None = None) -> DataFrame:
     """Crop-rescue channel: tile probe prints (query side) ±query_range
     against the stored prints — DIRECTED hits per (query image, stored
     image, tile).
@@ -271,32 +229,26 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     equi-join on the probe hash, int64 ids, no new shuffle kinds."""
     hot = hot_hash_set(prints, cfg, n_images=n_images,
                        cap=cfg.hash_max_images)
-    if "is_std" in prints.columns:  # pre-split stores: all prints std
-        prints = prints.where(F.col("is_std"))
-    store = prints if hot is None else prints.join(hot, "hash", "left_anti")
+    std = prints.where(F.col("is_std"))
+    store = std if hot is None else std.join(hot, "hash", "left_anti")
     q = (tile_prints if hot is None
          else tile_prints.join(hot, "hash", "left_anti"))
-    sid = (F.col("iid") if "iid" in prints.columns
-           else F.xxhash64("image_id"))
-    qid = (F.col("iid") if "iid" in tile_prints.columns
-           else F.xxhash64("image_id"))
     _check_packable(cfg)
     r = cfg.tile_query_range
     if r == 0:
         # exact-hash probe (the default; config.py documents the
         # measurement): a plain equi-join, no explode fan-out
         probe = q.select(
-            qid.alias("id_q"), "tile_id",
+            F.col("iid").alias("id_q"), "tile_id",
             _pack_half("t1", "f1").alias("_q32"),
             F.col("hash").alias("probe_hash"))
     else:
         probe = q.select(
-            qid.alias("id_q"), "tile_id",
+            F.col("iid").alias("id_q"), "tile_id",
             _pack_half("t1", "f1").alias("_q32"),
             F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
             .alias("probe_hash"))
-    probe = _semi_prefilter(probe, "probe_hash", cfg, store_hashes, prints)
-    ref = store.select(sid.alias("id_r"),
+    ref = store.select(F.col("iid").alias("id_r"),
                        F.col("hash").alias("probe_hash"),
                        _pack_half("t1", "f1").alias("_r32"))
     return (probe.join(ref, "probe_hash")
@@ -309,16 +261,12 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
 def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:
     """Map int64 pair ids back to string image_ids (canonical order).
 
-    `id_source` is any relation carrying image_id (one row per image) —
-    preferably the signatures table, whose minted `iid` column IS the id
-    map; a plain images relation falls back to xxhash64. The id
+    `id_source` carries (image_id, iid), one row per image — the
+    signatures table, whose minted `iid` column IS the id map. The id
     dimension is tiny relative to the hit relation, so Catalyst
     broadcasts it at bench scale; at cluster scale it is a shuffle join
     on the long key."""
-    ids = id_source.select(
-        F.col("image_id"),
-        (F.col("iid") if "iid" in id_source.columns
-         else F.xxhash64("image_id")).alias("_iid"))
+    ids = id_source.select("image_id", F.col("iid").alias("_iid"))
     out = (verified
            .join(ids.select(F.col("_iid").alias("id_a"),
                             F.col("image_id").alias("_sa")), "id_a")
@@ -328,91 +276,6 @@ def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:
     return out.select(
         F.least("_sa", "_sb").alias("id_a"),
         F.greatest("_sa", "_sb").alias("id_b"), *keep)
-
-
-def prefilter_hits(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
-    """Q5 as a relational pre-gate: drop pairs with < min_unfiltered_hits
-    raw hits before the Python verify kernel sees them (HAVING count>=K).
-    Same hash-partitioning as the downstream applyInPandas groupBy, so AQE
-    plans one shuffle."""
-    gated = (hits.groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("_n"))
-             .where(F.col("_n") >= cfg.min_unfiltered_hits)
-             .select("id_a", "id_b"))
-    return hits.join(gated, ["id_a", "id_b"])
-
-
-# ---------------------------------------------------------------- caption ---
-def minhash_pairs(signatures: DataFrame, cfg: PanakoConfig
-                  ) -> tuple[DataFrame, DataFrame]:
-    """LSH band candidates verified by signature-estimated Jaccard —
-    zip_with + aggregate keeps the estimate inside whole-stage codegen."""
-    keyed = signatures.select(
-        "image_id", F.explode("mh_bands").alias("key"))
-    cand, stats = pairs_from_keys(keyed, cfg.band_pair_cap)
-    sig = signatures.select("image_id", "minhash")
-    a = sig.select(F.col("image_id").alias("id_a"),
-                   F.col("minhash").alias("_ma"))
-    b = sig.select(F.col("image_id").alias("id_b"),
-                   F.col("minhash").alias("_mb"))
-    est = (cand.join(a, "id_a").join(b, "id_b")
-           .withColumn("jaccard_est",
-                       F.aggregate(
-                           F.zip_with("_ma", "_mb",
-                                      lambda x, y: (x == y).cast("int")),
-                           F.lit(0),
-                           lambda acc, v: acc + v)
-                       / F.lit(cfg.minhash_perms)))
-    out = (est.where(F.col("jaccard_est") >= cfg.minhash_jaccard_threshold)
-           .select("id_a", "id_b", "jaccard_est"))
-    return out, stats
-
-
-def simhash_pairs(signatures: DataFrame, cfg: PanakoConfig
-                  ) -> tuple[DataFrame, DataFrame]:
-    keyed = signatures.select("image_id", F.explode("sh_bands").alias("key"))
-    cand, stats = pairs_from_keys(keyed, cfg.band_pair_cap)
-    s = signatures.select("image_id", "simhash")
-    a = s.select(F.col("image_id").alias("id_a"), F.col("simhash").alias("_sa"))
-    b = s.select(F.col("image_id").alias("id_b"), F.col("simhash").alias("_sb"))
-    out = (cand.join(a, "id_a").join(b, "id_b")
-           .withColumn("hamming",
-                       F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
-           .where(F.col("hamming") <= cfg.simhash_hamming_threshold)
-           .select("id_a", "id_b", "hamming"))
-    return out, stats
-
-
-def phash_pairs(signatures: DataFrame, cfg: PanakoConfig
-                ) -> tuple[DataFrame, DataFrame]:
-    """Perceptual-hash image near-dup channel: band the 64-bit phash into
-    phash_bands sub-keys (guaranteed collision up to bands-1 bit errors),
-    verify candidates by Hamming <= threshold. All JVM-side bit ops.
-    """
-    bpb = cfg.phash_bits_per_band
-    mask = (1 << bpb) - 1
-    keys = F.array(*[
-        (F.lit(b << (bpb + 1))
-         + F.shiftrightunsigned(F.col("phash"), b * bpb)
-         .bitwiseAND(F.lit(mask))).alias(f"k{b}")
-        for b in range(cfg.phash_bands)])
-    keyed = signatures.select("image_id", F.explode(keys).alias("key"))
-    cand, stats = pairs_from_keys(keyed, cfg.band_pair_cap)
-    p = signatures.select("image_id", "phash")
-    a = p.select(F.col("image_id").alias("id_a"), F.col("phash").alias("_pa"))
-    b = p.select(F.col("image_id").alias("id_b"), F.col("phash").alias("_pb"))
-    out = (cand.join(a, "id_a").join(b, "id_b")
-           .withColumn("hamming",
-                       F.bit_count(F.col("_pa").bitwiseXOR(F.col("_pb"))))
-           .where(F.col("hamming") <= cfg.phash_hamming_threshold)
-           .select("id_a", "id_b", "hamming"))
-    return out, stats
-
-
-def caption_exact_pairs(signatures: DataFrame, cfg: PanakoConfig
-                        ) -> tuple[DataFrame, DataFrame]:
-    keyed = signatures.select("image_id", F.col("caption_hash").alias("key"))
-    return pairs_from_keys(keyed, cfg.band_pair_cap)
 
 
 # 1-byte channel codes for the fused flow's shuffle rows; decoded back
@@ -446,11 +309,10 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
                           ) -> tuple[DataFrame, DataFrame]:
     """All five signature channels in ONE pairing dataflow.
 
-    The per-channel functions below each build their own
-    explode/groupBy/join DAG — correct, but five channels x ~6 shuffle
-    stages of tiny data is pure scheduling overhead at bench scale and
-    five synchronization barriers at cluster scale. Here the keyed rows
-    are unioned with a channel tag first, pair once, then verify each
+    A DAG per channel would cost five channels x ~6 shuffle stages of
+    tiny data — pure scheduling overhead at bench scale and five
+    synchronization barriers at cluster scale. Here the keyed rows are
+    unioned with a channel tag first, pair once, then verify each
     channel's candidates with its own predicate in a single joined
     projection (whole-stage codegen; no Python).
 
@@ -463,8 +325,7 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     image_id and a 1-byte channel CODE instead of the channel name —
     names and string ids are resolved once, on the (tiny) verified
     output and the 5-row stats frame."""
-    sid = (F.col("iid") if "iid" in signatures.columns
-           else F.xxhash64("image_id")).alias("image_id")
+    sid = F.col("iid").alias("image_id")
 
     def ch(code: int):
         return F.lit(code).cast("tinyint").alias("channel")
@@ -498,9 +359,6 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     # candidates) costs more than every verification combined, so the
     # wide arrays only ever join the MinHash channel's own (tiny,
     # high-entropy-banded) candidate set.
-    nid = (F.col("iid") if "iid" in signatures.columns
-           else F.xxhash64("image_id"))
-
     def _two_sided(df: DataFrame, col: str, alias_a: str, alias_b: str):
         a = df.select(F.col("image_id").alias("id_a"),
                       F.col(col).alias(alias_a))
@@ -508,8 +366,7 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
                       F.col(col).alias(alias_b))
         return a, b
 
-    sigs_n = signatures.select(nid.alias("image_id"), "simhash", "phash",
-                               "minhash")
+    sigs_n = signatures.select(sid, "simhash", "phash", "minhash")
     bits = (cand.where(F.col("channel").isin(_CH_SIMHASH, _CH_PHASH))
             .join(sigs_n.select("image_id", "simhash", "phash")
                   .withColumnRenamed("image_id", "id_a")
@@ -542,8 +399,8 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
     # iid map (one row per image) so only the candidate set ever joins
     # the caption strings
     caps = (images.select("image_id", "caption")
-            .join(signatures.select("image_id", nid.alias("_nid")),
-                  "image_id")
+            .join(signatures.select("image_id",
+                                    F.col("iid").alias("_nid")), "image_id")
             .select(F.col("_nid").alias("image_id"), "caption"))
     ca, cb = _two_sided(caps, "caption", "_ca", "_cb")
     thresh = cfg.substring_min_len + 8 - 1  # winnow window w=8 (suffix.py)
@@ -564,24 +421,4 @@ def fused_candidate_pairs(signatures: DataFrame, images: DataFrame,
         out.withColumn("channel", _channel_name(F.col("channel"))),
         signatures).select("channel", "id_a", "id_b")
     stats = stats.withColumn("channel", _channel_name(F.col("channel")))
-    return out, stats
-
-
-def caption_substring_pairs(signatures: DataFrame, images: DataFrame,
-                            cfg: PanakoConfig) -> tuple[DataFrame, DataFrame]:
-    """Winnowed rolling-hash fingerprint keys; exact containment verify.
-
-    Only candidate pairs (a tiny set) join back to the captions — the full
-    caption column never shuffles.
-    """
-    keyed = signatures.select("image_id", F.explode("substr_fps").alias("key"))
-    cand, stats = pairs_from_keys(keyed, cfg.band_pair_cap)
-    caps = images.select("image_id", "caption")
-    a = caps.select(F.col("image_id").alias("id_a"), F.col("caption").alias("_ca"))
-    b = caps.select(F.col("image_id").alias("id_b"), F.col("caption").alias("_cb"))
-    thresh = cfg.substring_min_len + 8 - 1  # winnow window w=8 (suffix.py)
-    out = (cand.join(a, "id_a").join(b, "id_b")
-           .where(((F.length("_ca") >= thresh) & F.contains("_cb", "_ca"))
-                  | ((F.length("_cb") >= thresh) & F.contains("_ca", "_cb")))
-           .select("id_a", "id_b"))
     return out, stats

@@ -69,7 +69,6 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("tile_t1s", T.ArrayType(T.IntegerType())),
     T.StructField("tile_f1s", T.ArrayType(T.IntegerType())),
     T.StructField("tile_ids", T.ArrayType(T.IntegerType())),
-    T.StructField("tile_resc", T.ArrayType(T.BooleanType())),
     T.StructField("psnr_ok", T.BooleanType()),
     T.StructField("err", T.StringType()),
     T.StructField("_pid", T.IntegerType()),
@@ -98,7 +97,7 @@ def make_extract_fn(cfg: PanakoConfig):
                 "image_id", "iid", "w", "h", "phash", "n_prints",
                 "rescued", "n_std", "hashes",
                 "t1s", "f1s", "tile_hashes", "tile_t1s", "tile_f1s",
-                "tile_ids", "tile_resc", "psnr_ok", "err")}
+                "tile_ids", "psnr_ok", "err")}
             shingle_lists: list[np.ndarray] = []
             cap_hashes: list[int] = []
             cap_lens: list[int] = []
@@ -149,14 +148,11 @@ def make_extract_fn(cfg: PanakoConfig):
                         np.concatenate([t[3] for t in tiles]))
                     out["tile_ids"].append(np.concatenate(
                         [np.full(t[1].size, t[0], np.int32) for t in tiles]))
-                    out["tile_resc"].append(np.concatenate(
-                        [np.full(t[1].size, t[4], bool) for t in tiles]))
                 else:
                     out["tile_hashes"].append(np.zeros(0, np.int64))
                     out["tile_t1s"].append(np.zeros(0, np.int32))
                     out["tile_f1s"].append(np.zeros(0, np.int32))
                     out["tile_ids"].append(np.zeros(0, np.int32))
-                    out["tile_resc"].append(np.zeros(0, bool))
                 out["psnr_ok"].append(bool(psnr_ok))
                 out["err"].append(err)
                 cap = row.caption or ""
@@ -216,7 +212,7 @@ def run_extract(images: DataFrame, cfg: PanakoConfig,
 
 
 def split_prints(extracted: DataFrame) -> DataFrame:
-    """Extracted -> prints(image_id, hash, t1, f1, is_std)
+    """Extracted -> prints(image_id, iid, hash, t1, f1, is_std)
     (JVM-side posexplode).
 
     `is_std` marks the standard-window prints (position < n_std;
@@ -227,11 +223,9 @@ def split_prints(extracted: DataFrame) -> DataFrame:
     pz = F.posexplode(F.arrays_zip(F.col("hashes").alias("hash"),
                                    F.col("t1s").alias("t1"),
                                    F.col("f1s").alias("f1")))
-    ids = (["image_id", "iid"] if "iid" in extracted.columns
-           else ["image_id"])  # pre-iid stores append without the column
     return (extracted.where(F.col("err").isNull())
-            .select(*ids, "n_std", pz.alias("pos", "p"))
-            .select(*ids,
+            .select("image_id", "iid", "n_std", pz.alias("pos", "p"))
+            .select("image_id", "iid",
                     F.col("p.hash").alias("hash"),
                     F.col("p.t1").alias("t1"),
                     F.col("p.f1").alias("f1"),
@@ -239,7 +233,7 @@ def split_prints(extracted: DataFrame) -> DataFrame:
 
 
 def split_tile_prints(extracted: DataFrame) -> DataFrame:
-    """Extracted -> tile_prints(image_id[, iid], tile_id, hash, t1, f1).
+    """Extracted -> tile_prints(image_id, iid, tile_id, hash, t1, f1).
 
     Query-side rows for the crop-rescue channel (JVM-side explode of the
     flat-concatenated tile arrays); never persisted — the stored print
@@ -247,26 +241,20 @@ def split_tile_prints(extracted: DataFrame) -> DataFrame:
     z = F.explode(F.arrays_zip(F.col("tile_hashes").alias("hash"),
                                F.col("tile_t1s").alias("t1"),
                                F.col("tile_f1s").alias("f1"),
-                               F.col("tile_ids").alias("tile_id"),
-                               F.col("tile_resc").alias("tile_resc"))
+                               F.col("tile_ids").alias("tile_id"))
                   ).alias("p")
-    ids = (["image_id", "iid"] if "iid" in extracted.columns
-           else ["image_id"])
     return (extracted.where(F.col("err").isNull())
-            .select(*ids, z)
-            .select(*ids,
+            .select("image_id", "iid", z)
+            .select("image_id", "iid",
                     F.col("p.tile_id").alias("tile_id"),
                     F.col("p.hash").alias("hash"),
                     F.col("p.t1").alias("t1"),
-                    F.col("p.f1").alias("f1"),
-                    F.col("p.tile_resc").alias("tile_resc")))
+                    F.col("p.f1").alias("f1")))
 
 
 def split_signatures(extracted: DataFrame) -> DataFrame:
-    ids = (["image_id", "iid"] if "iid" in extracted.columns
-           else ["image_id"])
     return extracted.select(
-        *ids, "minhash", "mh_bands", "simhash", "sh_bands",
+        "image_id", "iid", "minhash", "mh_bands", "simhash", "sh_bands",
         "caption_hash", "caption_len", "substr_fps", "n_prints",
         "rescued", "phash", "psnr_ok", "err")
 

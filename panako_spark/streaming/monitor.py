@@ -144,9 +144,15 @@ def frame_to_wire(image_id: str, byts: bytes, w: int, h: int, fmt: str,
     socket monitor's contract): tab-separated
     `image_id  fmt  w  h  b64(bytes)  b64(utf8(caption))  phash`.
     Binary and free-text fields ride base64 so payload bytes can never
-    collide with the framing (tab/newline)."""
+    collide with the framing (tab/newline); the two plain-text fields
+    must not contain it either — parse_wire would see the wrong field
+    count and drop the frame — so they raise ValueError here."""
     import base64
 
+    for name, val in (("image_id", image_id), ("fmt", fmt)):
+        if any(c in val for c in "\t\n\r"):
+            raise ValueError(f"{name} {val!r} contains a tab or line "
+                             "break, which the wire framing reserves")
     return "\t".join([
         image_id, fmt, str(int(w)), str(int(h)),
         base64.b64encode(byts).decode("ascii"),

@@ -421,15 +421,13 @@ def test_config_overrides_round_trip():
         config_with_overrides(["query_range"])
 
 
-@pytest.mark.parametrize("tile_mode", ["never", "always"])
-def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
+def test_tile_prints_bit_exact_vs_sliced_image(cfg):
     """Crop-rescue tiles: extract_prints_with_tiles must equal extracting
     each sliced image directly — the profile-slice fast path
     (spectral.column_profiles) is bit-exact by row independence, and the
-    full-image prints are unchanged. Under tile_rescue_mode="never"
-    (the shipping default) a tile equals the NO-rescue extraction of
-    the sliced image; under "always" it equals the rescued extraction
-    at the tile floor."""
+    full-image prints are unchanged. Tiles never take the dense
+    re-pick, so a tile equals the NO-rescue extraction of the sliced
+    image."""
     import dataclasses
 
     import numpy as np
@@ -440,11 +438,7 @@ def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
         extract_prints, extract_prints_with_tiles, tile_row_ranges,
     )
 
-    cfg = dataclasses.replace(cfg, tile_rescue_mode=tile_mode)
-    slice_cfg = (dataclasses.replace(cfg, print_rescue_floor=0)
-                 if tile_mode == "never"
-                 else dataclasses.replace(
-                     cfg, print_rescue_floor=cfg.tile_rescue_floor))
+    slice_cfg = dataclasses.replace(cfg, print_rescue_floor=0)
     rows, _ = synth.generate_corpus(6, dup_fraction=0.4, seed=13)
     for r in rows:
         g = to_gray(r.pixels)
@@ -454,7 +448,7 @@ def test_tile_prints_bit_exact_vs_sliced_image(cfg, tile_mode):
         assert np.array_equal(fh, dh)
         assert np.array_equal(ft, dt)
         assert np.array_equal(ff, df)
-        tmap = {tid: (hh, tt, fff) for tid, hh, tt, fff, _rc in tiles}
+        tmap = {tid: (hh, tt, fff) for tid, hh, tt, fff in tiles}
         for tid, (r0, r1) in enumerate(tile_row_ranges(g.shape[0], cfg)):
             eh, et, ef = extract_prints(g[r0:r1, :], slice_cfg)
             if tid not in tmap:
@@ -470,7 +464,7 @@ def test_rescue_print_volume_bounded(cfg):
     """Cost guard for the print-density rescue: corpus-wide print
     volume with the rescue ON must stay within 1.5x of the rescue-OFF
     volume, and tile prints must be BIT-IDENTICAL to the no-rescue
-    extraction (tile_rescue_mode="never" ships). The round-4 uncapped
+    extraction (tiles never take the dense re-pick). The round-4 uncapped
     rescue read 2.66x total here and inflated the 69.7k-image
     candidate-join/verify phase ~2.5x wall before being contained
     (BENCH/ATTRIBUTION.md "Fix 5") — this test makes that class of
@@ -490,16 +484,15 @@ def test_rescue_print_volume_bounded(cfg):
         g = to_gray(r.pixels)
         (h, _, _), tiles, _, _ = extract_prints_with_tiles(g, cfg)
         on_full += h.size
-        on_tile += sum(hh.size for _, hh, _, _, _ in tiles)
+        on_tile += sum(hh.size for _, hh, _, _ in tiles)
         (h0, _, _), tiles0, _, _ = extract_prints_with_tiles(g, nocfg)
         off_full += h0.size
-        off_tile += sum(hh.size for _, hh, _, _, _ in tiles0)
+        off_tile += sum(hh.size for _, hh, _, _ in tiles0)
         assert h.size <= cfg.max_prints_per_image
-        if cfg.tile_rescue_mode == "never":
-            for (_, a, at, af, _), (_, b, bt, bf, _) in zip(tiles, tiles0):
-                assert np.array_equal(a, b)
-                assert np.array_equal(at, bt)
-                assert np.array_equal(af, bf)
+        for (_, a, at, af), (_, b, bt, bf) in zip(tiles, tiles0):
+            assert np.array_equal(a, b)
+            assert np.array_equal(at, bt)
+            assert np.array_equal(af, bf)
     total_infl = (on_full + on_tile) / (off_full + off_tile)
     assert total_infl <= 1.5, (
         f"rescue inflates corpus print volume {total_infl:.2f}x "

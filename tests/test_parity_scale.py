@@ -119,7 +119,7 @@ def test_truth_closure_recall_at_scale(pipeline_pairs_m, corpus_m):
     ("Fix 6": tile_min_coverage + rescue_min_score 13) united the last
     split clique — and 0.9969 before it, identical to both costlier
     configs (dense extras in the tile index: 2x that channel's join;
-    tile_rescue_mode="always": 2.3x its probe volume). Guarded against
+    dense re-picks for starved tiles: 2.3x its probe volume). Guarded against
     cheap inflation by
     test_rescue_keeps_out_of_clique_noise_at_baseline (direct false
     pairs <= 15) and the closure_ooc bound here: wrongly merging

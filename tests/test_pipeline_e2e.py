@@ -8,7 +8,8 @@ checks:
   2. QUALITY — union-channel recall vs ground-truth cliques is 1.0 on this
      corpus (matches the golden matcher's own quality).
   3. CLUSTERS — connected-component labels equal the union-find golden.
-  4. RESUME — a second run reuses every checkpoint (no recompute).
+  4. RESUME — a second run reuses every checkpoint (no recompute), and
+     refuses a store extracted under a different config.
 """
 
 import collections
@@ -129,6 +130,17 @@ def test_resume_reuses_checkpoints(pipeline_result, corpus, cfg, spark):
     assert pairs2 == pairs1
 
 
+def test_resume_refuses_changed_extraction_config(pipeline_result, cfg,
+                                                  spark):
+    """A rerun over the same store with an extractor field changed must
+    fail loudly: the stored prints were extracted under the old config,
+    and reusing them would return pairs a fresh run would not."""
+    _, _, _, store, images = pipeline_result
+    with pytest.raises(ValueError, match="config"):
+        run_pipeline(spark, images, store,
+                     cfg.with_(log_freq=not cfg.log_freq))
+
+
 def test_lineage_written(pipeline_result, spark):
     _, _, _, store, _ = pipeline_result
     lin = store.read_lineage(spark)
@@ -159,28 +171,6 @@ def test_olaf_strategy_spark_golden_parity(spark, cfg, tmp_path):
                       .where("channel = 'landmark'").collect()}
     missing = golden_pairs - spark_landmark
     assert len(missing) / max(1, len(golden_pairs)) <= 0.01, missing
-
-
-def test_parity_tile_channel_dense_mode(spark, cfg, tmp_path):
-    """tile_rescue_mode="always" (the dense-tile knob the shipping
-    "never" default leaves dormant) must keep exact Spark==golden tile
-    parity: the per-tile rescue flag threads through the Spark channel
-    (candidates -> verify -> rescue gate) exactly as the golden
-    matcher's extra_rescued argument does."""
-    acfg = cfg.with_(tile_rescue_mode="always")
-    rows, _ = synth.generate_corpus(14, dup_fraction=0.5, seed=777)
-    gm = GoldenMatcher(acfg)
-    grays = {r.image_id: to_gray(r.pixels) for r in rows}
-    for r in rows:
-        gm.store_image(r.image_id, grays[r.image_id], phash=r.phash)
-    golden_tiles = gm.tile_rescue_pairs(grays)
-
-    images = spark.createDataFrame(rows_to_pandas(rows))
-    res = run_pipeline(spark, images, CheckpointStore(str(tmp_path)), acfg)
-    spark_tiles = {(r["id_a"], r["id_b"])
-                   for r in res.dup_pairs.where("channel = 'tile'")
-                   .collect()}
-    assert spark_tiles == golden_tiles
 
 
 def test_parity_tile_channel(pipeline_result, corpus, cfg):

@@ -164,32 +164,3 @@ def test_iceberg_available_probe(spark):
     from panako_spark.io.checkpoint import iceberg_available
 
     assert iceberg_available(spark, "panako") is False  # not configured
-
-
-def test_probe_prefilter_is_result_exact(spark, cfg):
-    """cfg.probe_prefilter='semi' must be a pure plan optimization: the
-    broadcast semi pre-filter drops only probe rows the real equi-join
-    would reject, so the hit relations are identical with it on or off
-    (for both the ±range landmark probe and the exact tile probe)."""
-    from panako_spark.stages.candidates import landmark_hits, tile_hits
-
-    prints = spark.createDataFrame(
-        [(f"i{k % 40}", k % 40, (k * 37) % 211, k % 7, k % 5)
-         for k in range(600)],
-        "image_id string, iid long, hash long, t1 int, f1 int")
-    tile_prints = spark.createDataFrame(
-        [(f"i{k % 17}", k % 17, k % 3, (k * 53) % 211, k % 6, k % 4)
-         for k in range(300)],
-        "image_id string, iid long, tile_id int, hash long, t1 int, f1 int")
-
-    on = cfg.with_(probe_prefilter="semi")
-    off = cfg.with_(probe_prefilter="none")
-    lm_on = landmark_hits(prints, on, numeric_ids=True).collect()
-    lm_off = landmark_hits(prints, off, numeric_ids=True).collect()
-    assert sorted(map(tuple, lm_on)) == sorted(map(tuple, lm_off))
-    assert lm_on  # non-vacuous
-
-    t_on = tile_hits(tile_prints, prints, on).collect()
-    t_off = tile_hits(tile_prints, prints, off).collect()
-    assert sorted(map(tuple, t_on)) == sorted(map(tuple, t_off))
-    assert t_on

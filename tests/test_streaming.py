@@ -11,10 +11,23 @@ import pytest
 from panako_spark.config import PanakoConfig
 from panako_spark.data.synth import generate_corpus, rows_to_pandas
 from panako_spark.stages.extract import run_extract, split_prints
-from panako_spark.streaming.monitor import start_monitor
+from panako_spark.streaming.monitor import frame_to_wire, start_monitor
 
 
-@pytest.mark.timeout(300)
+def test_frame_to_wire_rejects_framing_chars():
+    """A tab or line break in a plain-text wire field would split the
+    frame into the wrong number of fields, which parse_wire drops
+    silently; the sender refuses such a frame instead."""
+    for bad in ("\t", "\n", "\r"):
+        with pytest.raises(ValueError, match="image_id"):
+            frame_to_wire(f"a{bad}b", b"\x00", 1, 1, "png", "cap", 0)
+        with pytest.raises(ValueError, match="fmt"):
+            frame_to_wire("img0", b"\x00", 1, 1, f"png{bad}", "cap", 0)
+    # the free-text caption rides base64, so it may hold any character
+    assert frame_to_wire("img0", b"\x00", 1, 1, "png", "c\td\n", 0) \
+        .count("\t") == 6
+
+
 def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
     rows, _ = generate_corpus(12, dup_fraction=0.5, seed=99)
     base = [r for r in rows if "_dup" not in r.image_id]
@@ -52,7 +65,6 @@ def test_streaming_monitor_finds_dups(spark, cfg, tmp_path):
         assert "_dup" in qid and "_dup" not in rid
 
 
-@pytest.mark.timeout(300)
 def test_live_monitor_rate_source(spark, cfg, tmp_path):
     """S3 live-device analog: an unbounded rate-micro-batch stream (no
     files, exists only while the query runs) synthesizes frames that
@@ -93,7 +105,6 @@ def test_live_monitor_rate_source(spark, cfg, tmp_path):
         f"live monitor missed originals: {sorted(got)[:8]}")
 
 
-@pytest.mark.timeout(300)
 def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
     """S3 over a REAL network receiver: a TCP peer pushes wire-encoded
     frames (tab/base64 framing) into the socket source; the monitor
@@ -105,9 +116,7 @@ def test_socket_monitor_receives_and_matches(spark, cfg, tmp_path):
     import threading
     import time as _t
 
-    from panako_spark.streaming.monitor import (
-        frame_to_wire, start_socket_monitor,
-    )
+    from panako_spark.streaming.monitor import start_socket_monitor
 
     rows, _ = generate_corpus(8, dup_fraction=0.5, seed=41)
     base = [r for r in rows if "_dup" not in r.image_id]

@@ -4,12 +4,11 @@ Decouples the report from the hunt process: tools/scaling_run.py appends
 every successful run to BENCH/scaling_runs.jsonl as it happens and logs
 per-pair quiet-window probes + same-window ceilings to its stdout, so
 the full report can be (re)built at any time — including after a hunt
-that was cut short — from those two artifacts plus an optional
-extract-kernel ceiling measurement (tools/kernel_ceiling.py --json).
+that was cut short — from those two artifacts.
 
 Usage:
     python tools/scaling_report.py [--log /tmp/scaling_hunt_r3.log]
-        [--kernel-json '<json>'] [--n 2] [--threshold 5.0]
+        [--n 2] [--threshold 5.0]
 """
 
 from __future__ import annotations
@@ -56,10 +55,6 @@ def med(vals):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--log", default="/tmp/scaling_hunt_r3.log")
-    ap.add_argument("--kernel-json", default=None,
-                    help="output of tools/kernel_ceiling.py --json")
-    ap.add_argument("--freq-json", default=None,
-                    help="output of tools/freq_probe.py --json")
     ap.add_argument("--n", type=int, default=2)
     ap.add_argument("--threshold", type=float, default=5.0)
     args = ap.parse_args()
@@ -67,8 +62,6 @@ def main() -> None:
     n, big = args.n, args.n * 4
     runs = load_runs()
     log = parse_log(args.log)
-    kern = json.loads(args.kernel_json) if args.kernel_json else None
-    freq = json.loads(args.freq_json) if args.freq_json else None
 
     modes = sorted({r["mode"] for r in runs})
     lines_rows, eff_blocks, diag_blocks = [], [], []
@@ -101,7 +94,6 @@ def main() -> None:
                 "ceiling": meta.get("ceiling"),
                 "eff_vs_ceiling": (sp / meta["ceiling"]
                                    if meta.get("ceiling") else None),
-                "eff_vs_kernel": (sp / kern["ratio"] if kern else None),
                 "clean": all(legs[c]["steal_pct"] <= args.threshold
                              for c in (n, big)),
                 "steals": {c: legs[c]["steal_pct"] for c in (n, big)},
@@ -133,11 +125,7 @@ def main() -> None:
         blk = (f"- **{mode}**: {len(clean_pairs)}/{len(pairs)} clean "
                f"matched-window pairs; clean-pair median raw efficiency "
                f"**{eff_raw:.3f}** (median vs same-window spin ceiling "
-               f"{eff_ceil:.3f}")
-        if kern:
-            blk += (f"; median vs extract-kernel ceiling "
-                    f"{med([p['eff_vs_kernel'] for p in src]):.3f}")
-        blk += ")."
+               f"{eff_ceil:.3f}).")
         if best:
             blk += (f" Best clean pair: raw {best['eff_raw']:.3f} "
                     f"(speedup {best['speedup']:.2f}x, steal "
@@ -158,54 +146,6 @@ def main() -> None:
                 + f", busy cores {p['busy'][n]}/{n} and {p['busy'][big]}/{big}"
                 + (f", GC {gc}" if gc else "")
                 + ("" if p["clean"] else "  [CONTAMINATED]"))
-
-    kern_txt = ""
-    if kern:
-        kern_txt = f"""
-## Extract-kernel ceiling (workload-representative)
-
-The spin ceiling above is cache-resident integer arithmetic — blind to
-the DRAM-bandwidth / LLC sharing a decode+FFT workload actually
-contends on. `tools/kernel_ceiling.py` runs the EXACT mapInPandas
-extract kernel (decode, PSNR roundtrip, column profiles, rfft, peaks,
-landmark+tile hashing, MinHash/SimHash/substring) in pinned plain
-multiprocessing workers — zero Spark, zero JVM:
-
-```json
-{json.dumps(kern)}
-```
-
-**{kern['ratio']:.2f}x** at {4 * kern['n_procs']} vs {kern['n_procs']}
-processes. The gap between this and 4.0x is the VM's memory subsystem;
-the remaining gap down to the pipeline's measured speedup is the
-single-shared-JVM substrate (one heap, one collector, one shuffle
-service for all task threads — see GC percentages below), which a real
-cluster with 4N separate executors does not share. On a real cluster
-both confounders vanish: nodes bring their own DRAM and their own JVM,
-the north rule's ~1.0 ceiling.
-"""
-
-    freq_txt = ""
-    if freq and freq.get("per_core_ratio"):
-        pr = freq["per_core_ratio"]
-        freq_txt = f"""
-## Per-core clock under load (turbo droop)
-
-`tools/freq_probe.py` spins a calibrated integer loop pinned to k
-cores and reports iterations/s per core — a software clock immune to
-the VM's static /proc/cpuinfo MHz:
-
-```json
-{json.dumps(freq)}
-```
-
-A busy core delivers **{pr:.3f}x** the single-..-few-core rate when 8
-cores are busy vs 2 — a hardware all-core-turbo effect that multiplies
-into EVERY stage of a strong-scaling measurement on one box (upper
-bound {4 * pr:.2f}x speedup before any software effect) and does not
-exist across cluster sizes on a real cluster, where every node runs
-all-core frequency at both N and 4N.
-"""
 
     startup = log.get("startup_ceiling")
     md = f"""# BENCH/BASELINE — measured throughput + scaling evidence
@@ -253,7 +193,7 @@ input; target >= 0.8 per BASELINE.json.)
 ## Matched-window pairs (each pair: both legs + its own ceiling probe)
 
 {chr(10).join(diag_blocks)}
-{kern_txt}{freq_txt}
+
 ## Reading
 
 No real cluster exists in this sandbox; per the north rule's sanctioned
@@ -268,8 +208,8 @@ the same pass.
 ## Raw JSON
 
 ```json
-{json.dumps({"runs": runs, "log_meta": {str(k): v for k, v in log.items()},
-             "kernel_ceiling": kern}, indent=1)}
+{json.dumps({"runs": runs, "log_meta": {str(k): v for k, v in log.items()}},
+           indent=1)}
 ```
 """
     with open(OUT, "w") as f:

@@ -236,9 +236,9 @@ def _history_section(mode: str, lo: int, hi: int) -> str:
         if lo in levels and hi in levels:
             ratio = levels[hi] / levels[lo]
             bw = (f"\nThe pure-CPU ceiling above bounds compute-bound "
-                  f"code only. The STREAM-triad probe "
-                  f"(tools/bandwidth_probe.py, BENCH/bandwidth_probe"
-                  f".json) measures the DRAM side of the same box: "
+                  f"code only. The recorded STREAM-triad probe "
+                  f"(BENCH/bandwidth_probe.json) measures the DRAM "
+                  f"side of the same box: "
                   f"aggregate bandwidth from {lo} to {hi} pinned "
                   f"processes scales **{ratio:.2f}x** "
                   f"({levels[lo]:.1f} -> {levels[hi]:.1f} GB/s), so a "
