@@ -4,9 +4,12 @@ store -> query -> dedup lifecycle (SURVEY.md §3):
     images (Iceberg/parquet)
       -> extract [mapInPandas, one decode pass, in-memory persist]
       -> prints / signatures                          checkpoints
-      -> candidates: landmark ±range self-join, MinHash/SimHash LSH bands,
-         exact caption, substring fingerprints        checkpoint: pairs
-      -> verify [applyInPandas Q5-Q13 kernel]         checkpoint: verified
+      -> three concurrent branches:
+         landmark ±range self-join -> verify [mapInPandas Q5-Q13 kernel]
+                                                      checkpoint: verified
+         MinHash/SimHash/phash LSH bands, exact caption, substring
+         fingerprints (one fused dataflow)            checkpoint: fused_pairs
+         tile probes ±range the prints -> tile verify checkpoint: tile_pairs
       -> connected components (large-star/small-star) checkpoint: clusters
 
 Every stage goes through CheckpointStore.read_or_compute, so a killed run
@@ -135,28 +138,40 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
 
     lineage_rows: list = []
     extracted: DataFrame | None = None
+    fused_caches: list = []
     ex = ThreadPoolExecutor(max_workers=3)
+
+    def label(name: str) -> None:
+        # thread-local job label: every Spark job the calling thread
+        # submits shows as panako:<stage> in the UI/event log — the
+        # three concurrent branches are otherwise indistinguishable
+        # "parquet at ..." writes when profiling scaling
+        try:
+            spark.sparkContext.setJobDescription(f"panako:{name}")
+        except Exception:  # noqa: BLE001 — labels must never fail a run
+            pass
+
+    def release_caches() -> None:
+        # repeated runs in one session must not leak memory
+        nonlocal extracted
+        if extracted is not None:
+            extracted.unpersist()
+            extracted = None
+        for c in fused_caches:   # candidate/count caches
+            c.unpersist()
+        fused_caches.clear()
+
     try:
         # census (tiny id-only aggregate) overlaps the extract scan
         def _census():
-            try:
-                spark.sparkContext.setJobDescription("panako:census")
-            except Exception:  # noqa: BLE001
-                pass
+            label("census")
             return corpus_census(images)
 
         census_fut = ex.submit(_census)
 
         def timed(name: str, fn):
             t0 = time.monotonic()
-            # thread-local job label: every Spark job this branch thread
-            # submits shows as panako:<stage> in the UI/event log — the
-            # three concurrent branches are otherwise indistinguishable
-            # "parquet at ..." writes when profiling scaling
-            try:
-                spark.sparkContext.setJobDescription(f"panako:{name}")
-            except Exception:  # noqa: BLE001 — labels must never fail a run
-                pass
+            label(name)
             out = fn()
             stats[f"t_{name}_s"] = round(time.monotonic() - t0, 2)
             return out
@@ -238,7 +253,6 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             return C.resolve_numeric_ids(v, signatures)
 
         fused_stats_box: list = []
-        fused_caches: list = []
 
         def compute_fused() -> DataFrame:
             fused, fused_stats = C.fused_candidate_pairs(
@@ -284,9 +298,6 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         verified = fut_v.result()
         fused_pairs = fut_f.result()
         tile_pairs = fut_t.result()
-        if extracted is not None:
-            extracted.unpersist()
-            extracted = None
 
         dup_pairs = (verified
                      .select(F.lit("landmark").alias("channel"),
@@ -299,7 +310,10 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
         if fused_stats_box:
             # the band-count cache is warm after the fused write, so this
             # stats job costs ~nothing; rows go into the one deferred
-            # lineage append below
+            # lineage append below. The main thread still carries the
+            # extract label, so relabel: this job belongs to the fused
+            # branch.
+            label("pairs")
             rows = fused_stats_box[0].collect()
             for row in rows:
                 stats[f"bands_{row['channel']}"] = {k: row[k] for k in (
@@ -309,8 +323,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                  int(r["n_hot_keys"]),
                  int(r["dropped_cross_pairs_estimate"]), 0, store.run_id)
                 for r in rows)
-        for c in fused_caches:   # release candidate/count caches: repeated
-            c.unpersist()        # runs in one session must not leak memory
+        release_caches()
 
         # ---- clustering -----------------------------------------------------
         clusters = timed("cluster", lambda: store.read_or_compute(
@@ -332,9 +345,11 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                        "signature_count long, band_count long, "
                        "elapsed_ms long, run_id string").coalesce(1))
     finally:
-        if extracted is not None:
-            extracted.unpersist()
-        ex.shutdown(wait=False)
+        # when one branch raises, its siblings must finish before the
+        # caches they read are released, and must not keep submitting
+        # jobs after run_pipeline has returned control to the caller
+        ex.shutdown(wait=True, cancel_futures=True)
+        release_caches()
 
     stats["elapsed_s"] = time.monotonic() - t_start
     return PipelineResult(clusters=clusters, dup_pairs=dup_pairs,

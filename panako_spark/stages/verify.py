@@ -22,6 +22,14 @@ time and its GC pressure slowed every later stage in the same JVM):
     one batch + the largest pair run, never the whole partition.
     Partition boundaries can't split a pair (hash-partitioned on the
     pair key), and the explicit sortWithinPartitions pins contiguity.
+  * the exchange carries no partition count: spark.sql.shuffle.partitions
+    is only its upper bound, and AQE coalesces the hash buckets to fit
+    the runtime hit volume. Every mapInPandas task pays a fixed Python
+    worker start (~0.3 core-s on a 4-vCPU host, whatever its input): at
+    a fixed 32 partitions, a probe_batch verify stage fed 0.3 MB of hits
+    cost ~20 Python core-s; as the 1 task AQE picks, ~1 core-s.
+    Coalescing merges whole buckets and the sort runs after the
+    coalesced read, so each pair's run stays contiguous.
   * the hit relation is symmetric (|h_a - h_b| <= range), so hits are
     stored once per canonical pair (id_a < id_b) and the kernel tries
     both query orientations — the union the reference's dedup driver
@@ -230,8 +238,7 @@ def make_tile_verify_batches(cfg: PanakoConfig):
     return tile_verify_batches
 
 
-def run_tile_verify(hits: DataFrame, cfg: PanakoConfig,
-                    partitions: int | None = None) -> DataFrame:
+def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
     """tile hits(id_q, id_r, tile_id, tf) -> directed
     (id_q, id_r, tile_id, score); tf is the packed coordinate int64
     (candidates._pack_half).
@@ -243,9 +250,8 @@ def run_tile_verify(hits: DataFrame, cfg: PanakoConfig,
     score >= cfg.tile_min_score and canonicalizes pair order."""
     from pyspark.sql import Window
 
-    n = partitions or cfg.shuffle_partitions
     w = Window.partitionBy("id_q", "id_r", "tile_id")
-    gated = (hits.repartition(n, "id_q", "id_r")
+    gated = (hits.repartition("id_q", "id_r")
              .withColumn("_n", F.count("*").over(w))
              .where(F.col("_n") >= cfg.min_unfiltered_hits)
              .drop("_n")
@@ -255,24 +261,22 @@ def run_tile_verify(hits: DataFrame, cfg: PanakoConfig,
 
 
 def run_verify(hits: DataFrame, cfg: PanakoConfig,
-               partitions: int | None = None,
                numeric_ids: bool = False) -> DataFrame:
     """hits(id_a, id_b, tf) -> verified pairs with score; tf is the
     packed coordinate int64 (candidates._pack_half).
 
-    One hash exchange on the pair key; the Q5 gate runs JVM-side as a
-    window count over the exchange's own sort (noise pairs with < 10
-    hits are ~95% of the hit relation on the bench corpus — gating them
-    before the Python boundary cuts the Arrow transfer ~20x), then the
-    Q6-Q13 alignment kernel does one NumPy pass per partition over flat
-    columns. With numeric_ids the id columns are int64 (see
+    One hash exchange on the pair key, sized by AQE; the Q5 gate runs
+    JVM-side as a window count over the exchange's own sort (noise pairs
+    with < 10 hits are ~95% of the hit relation on the bench corpus —
+    gating them before the Python boundary cuts the Arrow transfer ~20x),
+    then the Q6-Q13 alignment kernel does one NumPy pass per partition
+    over flat columns. With numeric_ids the id columns are int64 (see
     landmark_hits) — shuffle, sort, and Arrow all on fixed-width keys.
     """
     from pyspark.sql import Window
 
-    n = partitions or cfg.shuffle_partitions
     w = Window.partitionBy("id_a", "id_b")
-    gated = (hits.repartition(n, "id_a", "id_b")
+    gated = (hits.repartition("id_a", "id_b")
              .withColumn("_n", F.count("*").over(w))
              .where(F.col("_n") >= cfg.min_unfiltered_hits)  # Q5, JVM-side
              .drop("_n")

@@ -14,6 +14,7 @@ checks:
 
 import collections
 import itertools
+import time
 
 import pytest
 
@@ -187,3 +188,42 @@ def test_parity_tile_channel(pipeline_result, corpus, cfg):
     golden_tiles = gm.tile_rescue_pairs(grays)
     spark_tiles = {(a, b) for a, b, ch in pairs if ch == "tile"}
     assert spark_tiles == golden_tiles
+
+
+def test_failed_branch_leaves_no_jobs_or_caches(spark, cfg, tmp_path,
+                                                monkeypatch):
+    """When the landmark verify branch raises, run_pipeline must wait for
+    the sibling branches (no Spark job may still run, or start, after it
+    has raised) and release every cache it persisted."""
+    import panako_spark.pipeline as P
+
+    def broken_verify(*args, **kwargs):
+        raise RuntimeError("verify branch failed")
+
+    monkeypatch.setattr(P, "run_verify", broken_verify)
+    rows, _ = synth.generate_corpus(8, dup_fraction=0.5, seed=5)
+    images = spark.createDataFrame(rows_to_pandas(rows))
+    sc = spark.sparkContext
+
+    def cached() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
+
+    before = cached()
+    with pytest.raises(RuntimeError, match="verify branch failed"):
+        run_pipeline(spark, images, CheckpointStore(str(tmp_path)), cfg)
+
+    def jobs():
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # noqa: SLF001
+        return (set(sc.statusTracker().getJobIdsForGroup(None)),
+                list(sc.statusTracker().getActiveJobsIds()))
+
+    seen, active = jobs()
+    assert active == []
+    # a sibling branch left running plans for ~1-2 s before its first
+    # job; give it the time to show itself
+    time.sleep(3)
+    assert jobs() == (seen, [])
+    # no RDD the call persisted is still cached (the context cleaner may
+    # have dropped older, unreferenced ones meanwhile, so not a count)
+    assert cached() <= before

@@ -144,3 +144,27 @@ def test_probe_join_converts_to_shuffled_hash(spark, cfg):
         assert inner and all("ShuffledHashJoin" in ln for ln in inner), p
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_verify_exchanges_coalesced_by_aqe(spark, cfg):
+    """Both Python-verify exchanges carry no fixed partition count, so
+    AQE sizes them at runtime: every mapInPandas task pays a fixed Python
+    worker start, and a fixed count would make even a tiny probe pay it
+    that many times. The final plan must read the pair-key exchange
+    through a coalesced AQEShuffleRead."""
+    from panako_spark.plans.inspect import plan
+    from panako_spark.stages.verify import run_tile_verify, run_verify
+
+    hits = spark.createDataFrame(
+        [(k % 13, 100 + k % 17, k * 7919) for k in range(400)],
+        "id_a long, id_b long, tf long")
+    tile_hits = spark.createDataFrame(
+        [(k % 13, 100 + k % 17, k % 3, k * 7919) for k in range(400)],
+        "id_q long, id_r long, tile_id int, tf long")
+    for v in (run_verify(hits, cfg, numeric_ids=True),
+              run_tile_verify(tile_hits, cfg)):
+        v.collect()  # finalize the AQE plan
+        p = plan(v, "simple").split("Initial Plan", 1)[0]
+        assert "REPARTITION_BY_NUM" not in p, p
+        assert "REPARTITION_BY_COL" in p, p
+        assert "AQEShuffleRead coalesced" in p, p

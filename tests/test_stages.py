@@ -164,3 +164,62 @@ def test_iceberg_available_probe(spark):
     from panako_spark.io.checkpoint import iceberg_available
 
     assert iceberg_available(spark, "panako") is False  # not configured
+
+
+# ---------------------------------------------------------------- verify ----
+@pytest.fixture(scope="module")
+def verify_hits(spark, cfg):
+    """Landmark and tile hit relations of a small synthetic corpus,
+    collected once so every run below re-shuffles identical input."""
+    from panako_spark.data.synth import generate_corpus, rows_to_pandas
+    from panako_spark.stages.candidates import landmark_hits, tile_hits
+    from panako_spark.stages.extract import (
+        run_extract, split_prints, split_tile_prints)
+
+    rows, _ = generate_corpus(12, dup_fraction=0.5, seed=42)
+    ext = run_extract(spark.createDataFrame(rows_to_pandas(rows)),
+                      cfg).persist()
+    try:
+        prints = split_prints(ext)
+        lm = landmark_hits(prints, cfg, numeric_ids=True,
+                           n_images=len(rows))
+        tl = tile_hits(split_tile_prints(ext), prints, cfg,
+                       n_images=len(rows))
+        return ((lm.schema, lm.collect()), (tl.schema, tl.collect()))
+    finally:
+        ext.unpersist()
+
+
+@pytest.mark.parametrize("stage", ["landmark", "tile"])
+def test_verify_result_invariant_to_shuffle_partitions(spark, cfg,
+                                                       verify_hits, stage):
+    """AQE may merge any number of the pair-key hash buckets into one
+    task; the kernel's contiguous-run contract must hold either way, so
+    the verified row set cannot depend on the partition count."""
+    from panako_spark.stages.verify import run_tile_verify, run_verify
+
+    schema, rows = verify_hits[0 if stage == "landmark" else 1]
+
+    def verified():
+        hits = spark.createDataFrame(rows, schema)
+        v = (run_verify(hits, cfg, numeric_ids=True) if stage == "landmark"
+             else run_tile_verify(hits, cfg))
+        return sorted(tuple(r) for r in v.collect())
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        runs = []
+        # 8 uncoalesced buckets, 8 buckets AQE may merge, one bucket
+        for parts, coalesce in (("8", "false"), ("8", "true"),
+                                ("1", "true")):
+            spark.conf.set(keys[0], parts)
+            spark.conf.set(keys[1], coalesce)
+            runs.append(verified())
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert runs[0], "fixture produced no verified rows"
+    assert runs[1] == runs[0]
+    assert runs[2] == runs[0]
