@@ -32,6 +32,13 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# This VM's hypervisor steal bursts 10-40% for minutes; a single-shot
+# timing taken inside a burst reads as a phantom 2-10x regression
+# (BENCH_r02's 91 s extract was really 10.6 s). Every timing below
+# therefore carries its measured busy-relative steal so the number is
+# interpretable, and table queries report medians of 3.
+from perfbench.hygiene import cpu_counters, steal_pct  # noqa: E402
+
 # every oracle-checked table query from __spark_entry__.queries()
 # (VERDICT r3 #4: the headline bench used to omit four queries that
 # CORRECTNESS covers, which made round-over-round comparison lumpy —
@@ -91,29 +98,6 @@ def bench_corpus_path(n_base: int, spark=None) -> str:
     return path
 
 
-def _cpu_counters() -> tuple[int, int]:
-    """(steal, busy) ticks from /proc/stat — busy excludes idle+iowait.
-    This VM's hypervisor steal bursts 10-40% for minutes; a single-shot
-    timing taken inside a burst reads as a phantom 2-10x regression
-    (BENCH_r02's 91 s extract was really 10.6 s). Every timing below
-    therefore carries its measured busy-relative steal so the number is
-    interpretable, and table queries report medians of 3."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = list(map(int, parts[1:]))
-        steal = vals[7] if len(vals) > 7 else 0
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle
-    except OSError:  # non-Linux fallback
-        return 0, 1
-
-
-def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    return round(100.0 * (after[0] - before[0])
-                 / max(1, after[1] - before[1]), 2)
-
-
 def _spin_until(t_end: float) -> int:
     x = 0
     while time.monotonic() < t_end:
@@ -136,11 +120,11 @@ def wait_for_quiet(threshold: float = 5.0, max_wait_s: float = 240.0,
     procs = min(8, os.cpu_count() or 8)
     t0 = time.monotonic()
     while True:
-        s0 = _cpu_counters()
+        s0 = cpu_counters()
         t_end = time.monotonic() + probe_s
         with mp.Pool(procs) as p:
             p.map(_spin_until, [t_end] * procs)
-        steal = _steal_pct(s0, _cpu_counters())
+        steal = steal_pct(s0, cpu_counters())
         if steal <= threshold or time.monotonic() - t0 > max_wait_s:
             return steal
         print(f"bench: host busy (probe steal {steal:.1f}%) — waiting "
@@ -260,7 +244,7 @@ def main() -> None:
                       extra_conf=extra_conf)
     timings: dict[str, float] = {}
 
-    steal0 = _cpu_counters()
+    steal0 = cpu_counters()
     query_steal: dict[str, float] = {}
     if not args.skip_tables:
         import statistics
@@ -270,14 +254,14 @@ def main() -> None:
         qs = E.queries()
         for name in HEADLINE:
             reps = []
-            s_before = _cpu_counters()
+            s_before = cpu_counters()
             for _ in range(max(1, args.repeats)):
                 t0 = time.monotonic()
                 df = qs[name](spark, sf_dir)
                 df.count()
                 reps.append(time.monotonic() - t0)
             timings[name] = round(statistics.median(reps), 3)
-            query_steal[name] = _steal_pct(s_before, _cpu_counters())
+            query_steal[name] = round(steal_pct(s_before, cpu_counters()), 2)
 
     images_per_sec = None
     n_images = 0
@@ -305,7 +289,7 @@ def main() -> None:
         import pyspark.sql.functions as _F
         (_warm_ex(images.limit(args.cpus * 8).repartition(args.cpus), _PC())
          .select(_F.sum("n_prints")).collect())
-        s_pipe = _cpu_counters()
+        s_pipe = cpu_counters()
         gc0 = _jvm_gc_ms(spark)
         t0 = time.monotonic()
         stage_stats: dict = {}
@@ -323,7 +307,7 @@ def main() -> None:
             key = "image_dedup_pipeline"
         dt = time.monotonic() - t0
         timings[key] = round(dt, 3)
-        query_steal[key] = _steal_pct(s_pipe, _cpu_counters())
+        query_steal[key] = round(steal_pct(s_pipe, cpu_counters()), 2)
         gc1 = _jvm_gc_ms(spark)
         pipeline_gc_ms = (gc1 - gc0) if gc0 >= 0 and gc1 >= 0 else None
         images_per_sec = round(n_images / dt, 2)
@@ -340,7 +324,7 @@ def main() -> None:
         "cpus": args.cpus,
         "n_images": n_images,
         "images_per_sec": images_per_sec,
-        "steal_pct": _steal_pct(steal0, _cpu_counters()),
+        "steal_pct": round(steal_pct(steal0, cpu_counters()), 2),
         "steal_pct_per_query": query_steal,
         "repeats_per_table_query": args.repeats,
     }

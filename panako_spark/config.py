@@ -190,7 +190,6 @@ class PanakoConfig:
     # were already co-clustered through their shared base, so cluster
     # assignment was bit-identical) at 2.3x tile probe volume
     # (BENCH/ATTRIBUTION.md "Fix 5").
-    tile_rescue: bool = True
     tile_probe_offsets: tuple = (0.0, 0.05, 0.10, 0.15)
     tile_probe_heights: tuple = (0.87, 0.93)
     # Tile probes match EXACT hashes (range 0), unlike the landmark

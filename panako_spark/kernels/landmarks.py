@@ -382,15 +382,14 @@ def extract_prints_with_tiles(gray: np.ndarray, cfg: PanakoConfig):
     format. `rescued` is the FULL-image print-rescue flag
     (prints_with_rescue); only the full image may take the dense
     re-pick — tiles always use the standard windows (config.py
-    tile_rescue block has the measured reason)."""
+    crop-rescue tile probes block has the measured reason)."""
     from panako_spark.kernels.peaks import find_peaks_batch
     from panako_spark.kernels.spectral import (
         column_profiles, spectrograms_sliced,
     )
 
     profiles = column_profiles(gray, cfg)
-    tile_ranges = (tile_row_ranges(gray.shape[0], cfg)
-                   if cfg.tile_rescue else [])
+    tile_ranges = tile_row_ranges(gray.shape[0], cfg)
     # slice 0 is the full image (profiles' column count IS the image
     # height — column_profiles documents the row independence); the
     # rest are the probe tiles. One batched spectrogram + peak pass

@@ -162,8 +162,6 @@ class GoldenMatcher:
 
         from panako_spark.kernels.landmarks import extract_prints_with_tiles
 
-        if not self.cfg.tile_rescue:
-            return set()
         # Q13 coverage relaxed to tile_min_coverage for tile matches —
         # the Spark sibling (stages/verify.make_tile_verify_batches)
         # builds the identical vcfg

@@ -114,7 +114,7 @@ def column_profiles(gray: np.ndarray, cfg: PanakoConfig) -> np.ndarray:
     n_frames = 1 + (w - fw) // step
     if n_frames >= 1 << 21:
         # frame indices must fit the packed hit-coordinate budget
-        # (stages/candidates._pack_half: t < 2^21); a >4M-frame image is
+        # (stages/candidates.py tf packing: t < 2^21); a >4M-frame image is
         # a multi-gigapixel-wide raster — fail loudly, never corrupt
         # packed hashes silently
         raise ValueError(

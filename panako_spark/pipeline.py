@@ -239,15 +239,14 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
                     .drop("_ra", "_rb", "_pa", "_pb"))
 
         def compute_verified() -> DataFrame:
-            # Q5's min-hits gate runs inside the verify kernel (one
-            # shuffle on the pair key); the widest shuffle of the
+            # Q5's min-hits gate is a JVM Window on the verify exchange
+            # (one shuffle on the pair key); the widest shuffle of the
             # pipeline runs on int64 ids, resolved back to strings after
             # the stop-word cap is a function of DISTINCT stored images
             # (the golden matcher counts len(self._prints)); feeding the
             # raw row count would diverge on duplicate image_id inputs
-            v = run_verify(C.landmark_hits(prints, cfg, numeric_ids=True,
-                                           n_images=n_ids),
-                           cfg, numeric_ids=True)
+            v = run_verify(C.landmark_hits(prints, cfg, n_images=n_ids),
+                           cfg)
             v = rescue_gate(v, "id_a", "id_b")
             # the signatures table carries the persisted iid<->string map
             return C.resolve_numeric_ids(v, signatures)
@@ -266,8 +265,6 @@ def run_pipeline(spark: SparkSession, images: DataFrame, store: CheckpointStore,
             # cache) ±range the stored prints; verify per (pair, tile,
             # direction); accept at score >= tile_min_score. Golden
             # sibling: GoldenMatcher.tile_rescue_pairs.
-            if not cfg.tile_rescue:
-                return spark.createDataFrame([], "id_a string, id_b string")
             if extracted is not None:
                 tp = split_tile_prints(extracted)
             else:

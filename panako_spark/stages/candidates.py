@@ -20,6 +20,8 @@ them is the difference between a job that finishes and one that doesn't.
 
 from __future__ import annotations
 
+import operator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -112,21 +114,6 @@ def hot_hash_set(prints: DataFrame, cfg: PanakoConfig,
             .select("hash"))
 
 
-def hot_hash_filter(prints: DataFrame, cfg: PanakoConfig,
-                    n_images: int | None = None) -> DataFrame:
-    """Drop stop-word hashes present in > effective_hash_max_images images.
-
-    The golden matcher applies the identical rule (same config + corpus
-    size) so parity is preserved; at web scale these hashes are pure
-    noise amplifiers. The cap is corpus-size-aware (config.py) so large
-    real-world content clusters don't silently lose the landmark channel.
-    """
-    hot = hot_hash_set(prints, cfg, n_images)
-    if hot is None:
-        return prints
-    return prints.join(hot, "hash", "left_anti")
-
-
 # ---- packed hit coordinates -------------------------------------------
 # The hit relation is the pipeline's widest shuffle (the landmark and
 # tile probe-join outputs): the four spectral coordinates of a hit ride
@@ -153,8 +140,40 @@ def _check_packable(cfg: PanakoConfig) -> None:
             "in stages/candidates.py + stages/verify._unpack_tf")
 
 
+def probe_hits(query: DataFrame, store: DataFrame, cfg: PanakoConfig,
+               r: int, pair=operator.lt, id_col: str = "iid",
+               ids: tuple[str, str] = ("id_a", "id_b"),
+               extra: tuple[str, ...] = ()) -> DataFrame:
+    """The ±r near-hash probe every channel shares (reference Q1-Q4,
+    PanakoStorageKV.java:293-379): each query print probes the store
+    prints whose hash lies in [h-r, h+r]. One row per hit: (query id,
+    store id, *extra, tf), tf packing the query half high.
+
+    r > 0 re-expresses the band as explode(sequence(h-r, h+r)) + an
+    equi-join on the probe hash, so Catalyst runs a plain shuffled hash
+    join instead of a band join; r == 0 is the equi-join on the hash
+    itself, with no explode fan-out. `pair(query_id, store_id)` keeps a
+    hit: operator.lt enumerates a symmetric self-join once per canonical
+    pair, operator.ne is the self-id avoid set (Q2). `extra` query
+    columns (the tile id) ride along to the output."""
+    _check_packable(cfg)
+    q_id, s_id = ids
+    h = F.col("hash")
+    key = F.explode(F.sequence(h - r, h + r)) if r > 0 else h
+    probe = query.select(F.col(id_col).alias(q_id), *extra,
+                         _pack_half("t1", "f1").alias("_q32"),
+                         key.alias("probe_hash"))
+    ref = store.select(F.col(id_col).alias(s_id), h.alias("probe_hash"),
+                       _pack_half("t1", "f1").alias("_s32"))
+    return (probe.join(ref, "probe_hash")
+            .where(pair(F.col(q_id), F.col(s_id)))
+            .select(q_id, s_id, *extra,
+                    (F.col("_q32") * F.lit(_HALF) + F.col("_s32"))
+                    .alias("tf")))
+
+
 def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
-                  numeric_ids: bool = False,
+                  numeric_ids: bool = True,
                   n_images: int | None = None) -> DataFrame:
     """prints -> raw hit list per candidate pair (canonical id_a < id_b).
 
@@ -163,31 +182,25 @@ def landmark_hits(prints: DataFrame, cfg: PanakoConfig,
     union of both query directions of the reference's dedup driver
     (Deduplication.java:98-108) — verify runs both orientations downstream.
 
-    numeric_ids=True runs the hit rows on int64 ids instead of the string
-    image_id: the hit relation is by far the widest shuffle of the
-    pipeline, and 8-byte sort/join keys beat variable-length strings on
-    every axis (shuffle bytes, sort comparisons, Arrow transfer to the
-    verify kernel). The id is the dictionary-encoded `iid` minted at
-    ingest (extract.run_extract — unique by construction at any
-    cardinality, id map persisted in the checkpoints).
+    Stop-word hashes (present in > effective_hash_max_images images) are
+    dropped first; the golden matcher applies the identical rule (same
+    config + corpus size), and the cap is corpus-size-aware (config.py)
+    so large real-world content clusters keep the landmark channel.
+
+    The hit rows carry the int64 dictionary `iid` minted at ingest
+    (extract.run_extract — unique by construction at any cardinality,
+    id map persisted in the checkpoints), never the string image_id: the
+    hit relation is by far the widest shuffle of the pipeline, and 8-byte
+    keys beat variable-length strings on shuffle bytes, sort comparisons
+    and Arrow transfer alike. `numeric_ids` must be True.
     """
-    p = hot_hash_filter(prints, cfg, n_images=n_images)
-    p = p.withColumn("_iid", F.col("iid" if numeric_ids else "image_id"))
-    _check_packable(cfg)
-    r = cfg.query_range
-    probe = (p.select(
-        F.col("_iid").alias("id_a"),
-        _pack_half("t1", "f1").alias("_a32"),
-        F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
-        .alias("probe_hash")))
-    ref = p.select(F.col("_iid").alias("id_b"),
-                   F.col("hash").alias("probe_hash"),
-                   _pack_half("t1", "f1").alias("_b32"))
-    return (probe.join(ref, "probe_hash")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    (F.col("_a32") * F.lit(_HALF) + F.col("_b32"))
-                    .alias("tf")))
+    if not numeric_ids:
+        raise ValueError("landmark_hits runs on the int64 iid only; "
+                         "string ids are resolved after verify "
+                         "(resolve_numeric_ids)")
+    hot = hot_hash_set(prints, cfg, n_images)
+    p = prints if hot is None else prints.join(hot, "hash", "left_anti")
+    return probe_hits(p, p, cfg, cfg.query_range)
 
 
 def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
@@ -225,37 +238,18 @@ def tile_hits(tile_prints: DataFrame, prints: DataFrame, cfg: PanakoConfig,
     computed on the FULL print relation first, like the golden
     matcher's _hot_hashes, so stop-word parity is unaffected.
 
-    Scale shape: otherwise identical to landmark_hits — one explode +
-    equi-join on the probe hash, int64 ids, no new shuffle kinds."""
+    Scale shape: the landmark channel's probe join (probe_hits) on int64
+    ids, no new shuffle kinds; the default tile_query_range of 0 makes it
+    a plain equi-join (config.py documents the measurement)."""
     hot = hot_hash_set(prints, cfg, n_images=n_images,
                        cap=cfg.hash_max_images)
     std = prints.where(F.col("is_std"))
     store = std if hot is None else std.join(hot, "hash", "left_anti")
     q = (tile_prints if hot is None
          else tile_prints.join(hot, "hash", "left_anti"))
-    _check_packable(cfg)
-    r = cfg.tile_query_range
-    if r == 0:
-        # exact-hash probe (the default; config.py documents the
-        # measurement): a plain equi-join, no explode fan-out
-        probe = q.select(
-            F.col("iid").alias("id_q"), "tile_id",
-            _pack_half("t1", "f1").alias("_q32"),
-            F.col("hash").alias("probe_hash"))
-    else:
-        probe = q.select(
-            F.col("iid").alias("id_q"), "tile_id",
-            _pack_half("t1", "f1").alias("_q32"),
-            F.explode(F.sequence(F.col("hash") - r, F.col("hash") + r))
-            .alias("probe_hash"))
-    ref = store.select(F.col("iid").alias("id_r"),
-                       F.col("hash").alias("probe_hash"),
-                       _pack_half("t1", "f1").alias("_r32"))
-    return (probe.join(ref, "probe_hash")
-            .where(F.col("id_q") != F.col("id_r"))
-            .select("id_q", "id_r", "tile_id",
-                    (F.col("_q32") * F.lit(_HALF) + F.col("_r32"))
-                    .alias("tf")))
+    return probe_hits(q, store, cfg, cfg.tile_query_range,
+                      pair=operator.ne, ids=("id_q", "id_r"),
+                      extra=("tile_id",))
 
 
 def resolve_numeric_ids(verified: DataFrame, id_source: DataFrame) -> DataFrame:

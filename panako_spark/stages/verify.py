@@ -1,11 +1,17 @@
-"""Landmark verify stage: per-pair alignment kernel over grouped hits.
+"""Verify stage: the per-candidate match Q5-Q13 (PanakoStrategy.java:
+349-475) over grouped hits, for the landmark and the crop-rescue tile
+channels (and the monitor's probe_batch, which is landmark verify on
+string ids). Both run ONE plan shape and ONE run-carry loop:
 
-The reference's per-candidate match loop Q5-Q13 (PanakoStrategy.java:
-349-475) runs as ONE shuffle + ONE batched Python pass:
+    hits.repartition(pair)                  -- single hash exchange
+        .withColumn(_n, count over run key) -- Q5 gate, JVM Window
+        .where(_n >= min_unfiltered_hits)
+        .sortWithinPartitions(run key)      -- runs become contiguous
+        .mapInPandas(_run_carry)            -- flat int columns, NumPy
 
-    hits.repartition(id_a, id_b)            -- single hash exchange
-        .sortWithinPartitions(id_a, id_b)   -- pairs become contiguous runs
-        .mapInPandas(verify_batches)        -- flat int columns, NumPy kernel
+The run key is (id_a, id_b) for landmark pairs and (id_q, id_r,
+tile_id) for tiles; each channel passes its per-run function (landmark:
+both orientations; tile: the query orientation at tile_min_coverage).
 
 Design notes (measured on the bench corpus; the previous design used
 groupBy + 4x collect_list + a Q5 HAVING join, which built per-group
@@ -13,15 +19,17 @@ object arrays in the JVM — the object hash aggregate dominated stage
 time and its GC pressure slowed every later stage in the same JVM):
   * flat int columns ride Arrow's fast path; nothing is ever assembled
     into JVM list objects.
-  * the Q5 gate (>= min_unfiltered_hits raw hits) runs INSIDE the kernel,
-    vectorized over segment lengths — no gate aggregation, no second
-    shuffle, no join, and gated-out segments cost one comparison.
-  * a pair's run can straddle Arrow batch boundaries within a partition;
-    the kernel processes each batch's complete runs immediately and
-    carries only the trailing run into the next batch — peak memory is
-    one batch + the largest pair run, never the whole partition.
-    Partition boundaries can't split a pair (hash-partitioned on the
-    pair key), and the explicit sortWithinPartitions pins contiguity.
+  * the Q5 gate (>= min_unfiltered_hits raw hits) is a Window count over
+    the exchange's own sort: no gate aggregation, no second shuffle, no
+    join. Noise pairs with < 10 hits are ~95% of the hit relation on the
+    bench corpus, so gating them before the Python boundary cuts the
+    Arrow transfer ~20x.
+  * a run can straddle Arrow batch boundaries within a partition; the
+    loop processes each batch's complete runs immediately and carries
+    only the trailing run into the next batch — peak memory is one batch
+    + the largest run, never the whole partition. Partition boundaries
+    can't split a run (hash-partitioned on the pair), and the explicit
+    sortWithinPartitions pins contiguity.
   * the exchange carries no partition count: spark.sql.shuffle.partitions
     is only its upper bound, and AQE coalesces the hash buckets to fit
     the runtime hit volume. Every mapInPandas task pays a fixed Python
@@ -29,27 +37,28 @@ time and its GC pressure slowed every later stage in the same JVM):
     a fixed 32 partitions, a probe_batch verify stage fed 0.3 MB of hits
     cost ~20 Python core-s; as the 1 task AQE picks, ~1 core-s.
     Coalescing merges whole buckets and the sort runs after the
-    coalesced read, so each pair's run stays contiguous.
-  * the hit relation is symmetric (|h_a - h_b| <= range), so hits are
-    stored once per canonical pair (id_a < id_b) and the kernel tries
-    both query orientations — the union the reference's dedup driver
-    produces by querying every file (Deduplication.java:98-108).
+    coalesced read, so each run stays contiguous.
+  * the landmark hit relation is symmetric (|h_a - h_b| <= range), so
+    hits are stored once per canonical pair (id_a < id_b) and the kernel
+    tries both query orientations — the union the reference's dedup
+    command produces by querying every file (Deduplication.java:98-108).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import dataclasses
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 import pyspark.sql.types as T
 
 from panako_spark.config import PanakoConfig
 from panako_spark.kernels.verify import verify_pair
 
-def verified_schema(id_type: T.DataType = T.StringType()) -> T.StructType:
+def verified_schema(id_type: T.DataType) -> T.StructType:
     return T.StructType([
         T.StructField("id_a", id_type),
         T.StructField("id_b", id_type),
@@ -62,110 +71,6 @@ def verified_schema(id_type: T.DataType = T.StringType()) -> T.StructType:
     ])
 
 
-VERIFIED_SCHEMA = verified_schema()
-
-_FIELDS = ("id_a", "id_b", "score", "time_factor", "freq_factor",
-           "coverage", "q_start", "q_stop")
-_TAIL_DTYPES = ("int32", "float64", "float64", "float64", "int32", "int32")
-
-
-def _unpack_tf(tf: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                        np.ndarray, np.ndarray]:
-    """Inverse of candidates._pack_half packing: one non-negative int64
-    (t_q*1024 + f_q)*2^32 + (t_r*1024 + f_r) -> (q_t, q_f, r_t, r_f)."""
-    tf = tf.astype(np.int64, copy=False)
-    a32 = tf >> 32
-    b32 = tf & 0xFFFFFFFF
-    return a32 >> 10, a32 & 1023, b32 >> 10, b32 & 1023
-
-
-def _segments(ids_a: np.ndarray, ids_b: np.ndarray) -> np.ndarray:
-    """Start offsets of contiguous (id_a, id_b) runs, plus the end offset."""
-    n = ids_a.size
-    if n == 0:
-        return np.zeros(1, np.int64)
-    change = np.flatnonzero((ids_a[1:] != ids_a[:-1])
-                            | (ids_b[1:] != ids_b[:-1])) + 1
-    return np.concatenate(([0], change, [n]))
-
-
-def make_verify_batches(cfg: PanakoConfig, numeric_ids: bool = False):
-    min_hits = cfg.min_unfiltered_hits
-    id_dtype = "int64" if numeric_ids else "str"
-    dtypes = dict(zip(_FIELDS, (id_dtype, id_dtype) + _TAIL_DTYPES))
-
-    def _emit(rows: list) -> pd.DataFrame:
-        if not rows:
-            return pd.DataFrame(
-                {k: pd.Series([], dtype=d) for k, d in dtypes.items()})
-        cols = list(zip(*rows))
-        return pd.DataFrame({k: c for k, c in zip(_FIELDS, cols)})
-
-    def _process(ids_a, ids_b, a_t, a_f, b_t, b_f, rows: list) -> None:
-        bounds = _segments(ids_a, ids_b)
-        lens = np.diff(bounds)
-        # Q5 vectorized: only segments with enough raw hits reach Python
-        for si in np.flatnonzero(lens >= min_hits):
-            lo, hi = bounds[si], bounds[si + 1]
-            res = verify_pair(a_t[lo:hi], a_f[lo:hi],
-                              b_t[lo:hi], b_f[lo:hi], cfg)
-            rev = verify_pair(b_t[lo:hi], b_f[lo:hi],
-                              a_t[lo:hi], a_f[lo:hi], cfg)
-            best = max((r for r in (res, rev) if r is not None),
-                       key=lambda r: r.score, default=None)
-            if best is not None:
-                rows.append((ids_a[lo], ids_b[lo], best.score,
-                             best.time_factor, best.freq_factor,
-                             best.coverage, best.q_start, best.q_stop))
-
-    keys = ("id_a", "id_b", "tf")
-
-    def _run(cols: dict, lo: int, hi: int, rows: list) -> None:
-        a_t, a_f, b_t, b_f = _unpack_tf(cols["tf"][lo:hi])
-        _process(cols["id_a"][lo:hi], cols["id_b"][lo:hi],
-                 a_t, a_f, b_t, b_f, rows)
-
-    def verify_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-batch streaming with run carry: each Arrow batch is
-        # processed as NumPy columns immediately, except the trailing
-        # (id_a, id_b) run, which may continue in the next batch and is
-        # carried forward. Peak memory is ONE batch plus the largest
-        # single pair's hit run — not the whole partition — so a skewed
-        # 10^7-row partition can't OOM the Python worker. The partition
-        # is sorted on the pair key (run_verify), so runs are contiguous
-        # and never resume after being cut.
-        carry: dict[str, np.ndarray] | None = None
-        rows: list = []
-        for batch in it:
-            cols = {k: batch[k].to_numpy() for k in keys}
-            if carry is not None and carry["id_a"].size:
-                cols = {k: np.concatenate([carry[k], cols[k]])
-                        for k in keys}
-            n = cols["id_a"].size
-            if n == 0:
-                continue
-            bounds = _segments(cols["id_a"], cols["id_b"])
-            cut = int(bounds[-2]) if bounds.size >= 2 else 0
-            carry = {k: v[cut:] for k, v in cols.items()}
-            if cut:
-                _run(cols, 0, cut, rows)
-        if carry is not None and carry["id_a"].size:
-            _run(carry, 0, carry["id_a"].size, rows)
-        yield _emit(rows)
-
-    return verify_batches
-
-
-def _segments3(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Start offsets of contiguous (a, b, c) runs, plus the end offset."""
-    n = a.size
-    if n == 0:
-        return np.zeros(1, np.int64)
-    change = np.flatnonzero((a[1:] != a[:-1]) | (b[1:] != b[:-1])
-                            | (c[1:] != c[:-1])) + 1
-    return np.concatenate(([0], change, [n]))
-
-
 TILE_VERIFIED_SCHEMA = T.StructType([
     T.StructField("id_q", T.LongType()),
     T.StructField("id_r", T.LongType()),
@@ -173,119 +78,143 @@ TILE_VERIFIED_SCHEMA = T.StructType([
     T.StructField("score", T.IntegerType()),
 ])
 
-_TILE_KEYS = ("id_q", "id_r", "tile_id", "tf")
+_PAIR = ("id_a", "id_b")
+_TILE_RUN = ("id_q", "id_r", "tile_id")
+
+
+def _unpack_tf(tf: np.ndarray) -> tuple[np.ndarray, np.ndarray,
+                                        np.ndarray, np.ndarray]:
+    """Inverse of the candidates.probe_hits tf packing: one non-negative int64
+    (t_q*1024 + f_q)*2^32 + (t_r*1024 + f_r) -> (q_t, q_f, r_t, r_f)."""
+    tf = tf.astype(np.int64, copy=False)
+    a32 = tf >> 32
+    b32 = tf & 0xFFFFFFFF
+    return a32 >> 10, a32 & 1023, b32 >> 10, b32 & 1023
+
+
+def _segments(*keys: np.ndarray) -> np.ndarray:
+    """Start offsets of contiguous runs of equal key tuples, plus the end
+    offset."""
+    n = keys[0].size
+    if n == 0:
+        return np.zeros(1, np.int64)
+    change = np.zeros(n - 1, bool)
+    for k in keys:
+        change |= k[1:] != k[:-1]
+    return np.concatenate(([0], np.flatnonzero(change) + 1, [n]))
+
+
+def _run_carry(it: Iterator[pd.DataFrame], run_key: tuple[str, ...],
+               per_run: Callable, fields: list[str]
+               ) -> Iterator[pd.DataFrame]:
+    """Drive `per_run(q_t, q_f, r_t, r_f) -> tuple | None` over every
+    contiguous run_key run of the partition; each accepted run becomes
+    one output row (run key values + per_run's tuple).
+
+    Per-batch streaming with run carry: each Arrow batch is processed as
+    NumPy columns immediately, except its trailing run, which may
+    continue in the next batch and is carried forward. Peak memory is ONE
+    batch plus the largest single run — not the whole partition — so a
+    skewed 10^7-row partition can't OOM the Python worker. The partition
+    is sorted on the run key (_gated_runs), so runs are contiguous and
+    never resume after being cut. A partition without accepted runs
+    yields no frame."""
+    names = (*run_key, "tf")
+    rows: list = []
+
+    def flush(cols: dict, bounds: np.ndarray) -> None:
+        q_t, q_f, r_t, r_f = _unpack_tf(cols["tf"][:bounds[-1]])
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            out = per_run(q_t[lo:hi], q_f[lo:hi], r_t[lo:hi], r_f[lo:hi])
+            if out is not None:
+                rows.append(tuple(cols[k][lo] for k in run_key) + out)
+
+    carry: dict[str, np.ndarray] | None = None
+    for batch in it:
+        cols = {k: batch[k].to_numpy() for k in names}
+        if carry is not None:
+            cols = {k: np.concatenate([carry[k], cols[k]]) for k in names}
+        if cols["tf"].size == 0:
+            continue
+        bounds = _segments(*(cols[k] for k in run_key))
+        carry = {k: v[bounds[-2]:] for k, v in cols.items()}
+        flush(cols, bounds[:-1])
+    if carry is not None:
+        flush(carry, _segments(*(carry[k] for k in run_key)))
+    if rows:
+        yield pd.DataFrame(dict(zip(fields, zip(*rows))))
+
+
+def make_verify_batches(cfg: PanakoConfig):
+    """Q6-Q13 kernel for the landmark channel: one verify per (id_a, id_b)
+    run, trying both query orientations (the hit relation is stored once
+    per canonical pair) and keeping the better score."""
+
+    def per_run(a_t, a_f, b_t, b_f):
+        res = verify_pair(a_t, a_f, b_t, b_f, cfg)
+        rev = verify_pair(b_t, b_f, a_t, a_f, cfg)
+        best = max((r for r in (res, rev) if r is not None),
+                   key=lambda r: r.score, default=None)
+        if best is None:
+            return None
+        return (best.score, best.time_factor, best.freq_factor,
+                best.coverage, best.q_start, best.q_stop)
+
+    fields = verified_schema(T.LongType()).names
+    return lambda it: _run_carry(it, _PAIR, per_run, fields)
 
 
 def make_tile_verify_batches(cfg: PanakoConfig):
-    """Q5-Q13 kernel for the crop-rescue channel: one verify per
+    """Q6-Q13 kernel for the crop-rescue channel: one verify per
     (query image, stored image, tile) run, SINGLE orientation (the tile
-    prints are the query side, exactly like GoldenMatcher.query_prints).
-    Same per-batch streaming + trailing-run carry as make_verify_batches."""
-    import dataclasses
-
-    min_hits = cfg.min_unfiltered_hits
+    prints are the query side, exactly like GoldenMatcher.query_prints)."""
     # Q13 coverage relaxed to tile_min_coverage for TILE matches only
     # (config.py carries the swept rationale); every other gate stays
     # at full strength. GoldenMatcher.tile_rescue_pairs mirrors this.
     vcfg = dataclasses.replace(cfg, min_coverage=cfg.tile_min_coverage)
 
-    def _emit(rows: list) -> pd.DataFrame:
-        if not rows:
-            return pd.DataFrame({
-                "id_q": pd.Series([], dtype="int64"),
-                "id_r": pd.Series([], dtype="int64"),
-                "tile_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="int32")})
-        cols = list(zip(*rows))
-        return pd.DataFrame({k: c for k, c in zip(
-            ("id_q", "id_r", "tile_id", "score"), cols)})
+    def per_run(q_t, q_f, r_t, r_f):
+        res = verify_pair(q_t, q_f, r_t, r_f, vcfg)
+        return None if res is None else (res.score,)
 
-    def _run(cols: dict, lo: int, hi: int, rows: list) -> None:
-        ids_q = cols["id_q"][lo:hi]
-        ids_r = cols["id_r"][lo:hi]
-        tids = cols["tile_id"][lo:hi]
-        q_t, q_f, r_t, r_f = _unpack_tf(cols["tf"][lo:hi])
-        bounds = _segments3(ids_q, ids_r, tids)
-        lens = np.diff(bounds)
-        for si in np.flatnonzero(lens >= min_hits):
-            lo2, hi2 = bounds[si], bounds[si + 1]
-            res = verify_pair(q_t[lo2:hi2], q_f[lo2:hi2],
-                              r_t[lo2:hi2], r_f[lo2:hi2], vcfg)
-            if res is not None:
-                rows.append((ids_q[lo2], ids_r[lo2], tids[lo2], res.score))
+    fields = TILE_VERIFIED_SCHEMA.names
+    return lambda it: _run_carry(it, _TILE_RUN, per_run, fields)
 
-    def tile_verify_batches(it: Iterator[pd.DataFrame]
-                            ) -> Iterator[pd.DataFrame]:
-        carry: dict[str, np.ndarray] | None = None
-        rows: list = []
-        for batch in it:
-            cols = {k: batch[k].to_numpy() for k in _TILE_KEYS}
-            if carry is not None and carry["id_q"].size:
-                cols = {k: np.concatenate([carry[k], cols[k]])
-                        for k in _TILE_KEYS}
-            n = cols["id_q"].size
-            if n == 0:
-                continue
-            bounds = _segments3(cols["id_q"], cols["id_r"], cols["tile_id"])
-            cut = int(bounds[-2]) if bounds.size >= 2 else 0
-            carry = {k: v[cut:] for k, v in cols.items()}
-            if cut:
-                _run(cols, 0, cut, rows)
-        if carry is not None and carry["id_q"].size:
-            _run(carry, 0, carry["id_q"].size, rows)
-        yield _emit(rows)
 
-    return tile_verify_batches
+def _gated_runs(hits: DataFrame, cfg: PanakoConfig,
+                run_key: tuple[str, ...]) -> DataFrame:
+    """ONE hash exchange on the pair (run_key's first two columns; a
+    tile id rides inside its pair's partition), sized by AQE; the Q5
+    min-hits gate JVM-side as a window count per run over the exchange's
+    own sort; then a sort on the run key."""
+    w = Window.partitionBy(*run_key)
+    return (hits.repartition(*run_key[:2])
+            .withColumn("_n", F.count("*").over(w))
+            .where(F.col("_n") >= cfg.min_unfiltered_hits)  # Q5, JVM-side
+            .drop("_n")
+            # the kernel REQUIRES contiguous run_key runs; today the
+            # WindowExec's required child ordering provides that, but the
+            # contract must not depend on how the Window happens to plan.
+            # This sort is elided by Catalyst when the child ordering
+            # already satisfies it (asserted in test_plans).
+            .sortWithinPartitions(*run_key))
 
 
 def run_tile_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
     """tile hits(id_q, id_r, tile_id, tf) -> directed
     (id_q, id_r, tile_id, score); tf is the packed coordinate int64
-    (candidates._pack_half).
-
-    Same plan shape as run_verify: ONE hash exchange on the directed
-    pair key (tile_id rides inside the pair's partition), the Q5 min-hits
-    gate JVM-side over the exchange's own sort, then the NumPy kernel
-    per contiguous (pair, tile) run. The caller gates on
+    (candidates.probe_hits). Same plan shape as run_verify, with the
+    tile id in the run key. The caller gates on
     score >= cfg.tile_min_score and canonicalizes pair order."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_q", "id_r", "tile_id")
-    gated = (hits.repartition("id_q", "id_r")
-             .withColumn("_n", F.count("*").over(w))
-             .where(F.col("_n") >= cfg.min_unfiltered_hits)
-             .drop("_n")
-             .sortWithinPartitions("id_q", "id_r", "tile_id"))
-    return gated.mapInPandas(make_tile_verify_batches(cfg),
-                             TILE_VERIFIED_SCHEMA)
+    return _gated_runs(hits, cfg, _TILE_RUN).mapInPandas(
+        make_tile_verify_batches(cfg), TILE_VERIFIED_SCHEMA)
 
 
-def run_verify(hits: DataFrame, cfg: PanakoConfig,
-               numeric_ids: bool = False) -> DataFrame:
+def run_verify(hits: DataFrame, cfg: PanakoConfig) -> DataFrame:
     """hits(id_a, id_b, tf) -> verified pairs with score; tf is the
-    packed coordinate int64 (candidates._pack_half).
-
-    One hash exchange on the pair key, sized by AQE; the Q5 gate runs
-    JVM-side as a window count over the exchange's own sort (noise pairs
-    with < 10 hits are ~95% of the hit relation on the bench corpus —
-    gating them before the Python boundary cuts the Arrow transfer ~20x),
-    then the Q6-Q13 alignment kernel does one NumPy pass per partition
-    over flat columns. With numeric_ids the id columns are int64 (see
-    landmark_hits) — shuffle, sort, and Arrow all on fixed-width keys.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a", "id_b")
-    gated = (hits.repartition("id_a", "id_b")
-             .withColumn("_n", F.count("*").over(w))
-             .where(F.col("_n") >= cfg.min_unfiltered_hits)  # Q5, JVM-side
-             .drop("_n")
-             # the kernel REQUIRES contiguous (id_a, id_b) runs; today the
-             # WindowExec's required child ordering provides that, but the
-             # contract must not depend on how the Window happens to plan.
-             # This sort is elided by Catalyst when the child ordering
-             # already satisfies it (asserted in test_plans).
-             .sortWithinPartitions("id_a", "id_b"))
-    schema = verified_schema(T.LongType() if numeric_ids else T.StringType())
-    return gated.mapInPandas(
-        make_verify_batches(cfg, numeric_ids=numeric_ids), schema)
+    packed coordinate int64 (candidates.probe_hits). The output ids keep
+    the hits' id type: int64 iids in the pipeline (landmark_hits),
+    string image_ids in the monitor (probe_batch)."""
+    schema = verified_schema(hits.schema["id_a"].dataType)
+    return _gated_runs(hits, cfg, _PAIR).mapInPandas(
+        make_verify_batches(cfg), schema)

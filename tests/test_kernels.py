@@ -331,34 +331,50 @@ def test_extraction_fingerprint_tracks_format_fields(cfg):
     assert cfg.with_(minhash_seed=1).extraction_fingerprint() != fp
 
 
-def test_verify_kernel_run_carry(cfg):
+@pytest.mark.parametrize("ids", ["int64", "string"])
+@pytest.mark.parametrize("kernel", ["landmark", "tile"])
+def test_verify_kernel_run_carry(cfg, kernel, ids):
     """The mapInPandas kernel must produce identical verified pairs when
-    a pair's hit run straddles Arrow batch boundaries (per-batch carry,
-    bounded memory)."""
+    a run straddles Arrow batch boundaries (per-batch carry, bounded
+    memory) — for both kernels the run-carry loop serves (landmark
+    pair runs, tile (pair, tile) runs) and for both id types the hits
+    arrive with (int64 iids in the pipeline, string ids in the
+    monitor)."""
     import numpy as np
     import pandas as pd
 
-    from panako_spark.stages.verify import make_verify_batches
+    from panako_spark.stages.verify import (
+        make_tile_verify_batches, make_verify_batches,
+    )
 
     def pack(a_t, a_f, b_t, b_f):  # candidates._pack_half layout
         return ((a_t * 1024 + a_f) << 32) | (b_t * 1024 + b_f)
 
+    def ident(i):
+        return i if ids == "int64" else f"img{i}"
+
+    if kernel == "landmark":
+        make, key = make_verify_batches, ["id_a", "id_b"]
+        runs = [(1, 2), (3, 4), (5, 6)]
+    else:  # one pair holds two tile runs: the tile id alone splits them
+        make, key = make_tile_verify_batches, ["id_q", "id_r", "tile_id"]
+        runs = [(1, 2, 0), (3, 4, 0), (3, 4, 1), (5, 6, 2)]
     rows = []
-    for ia, ib in [(1, 2), (3, 4), (5, 6)]:
+    for run in runs:
         for t in range(15):
-            rows.append((ia, ib,
+            rows.append((ident(run[0]), ident(run[1]), *run[2:],
                          pack(t, 10 + (t % 3), t + 1, 10 + (t % 3))))
-    df = pd.DataFrame(rows, columns=["id_a", "id_b", "tf"])
-    fn = make_verify_batches(cfg, numeric_ids=True)
-    whole = pd.concat(list(fn(iter([df])))).reset_index(drop=True)
-    assert len(whole) == 3  # perfectly aligned runs all verify
+    df = pd.DataFrame(rows, columns=key + ["tf"])
+    whole = pd.concat(list(make(cfg)(iter([df])))).reset_index(drop=True)
+    assert len(whole) == len(runs)  # perfectly aligned runs all verify
+    assert list(whole[key[0]]) == [ident(r[0]) for r in runs]
     for size in (1, 4, 7, 16):
         parts = [df.iloc[i:i + size] for i in range(0, len(df), size)]
-        fn2 = make_verify_batches(cfg, numeric_ids=True)
-        split = pd.concat(list(fn2(iter(parts)))).reset_index(drop=True)
+        split = pd.concat(list(make(cfg)(iter(parts)))
+                          ).reset_index(drop=True)
         pd.testing.assert_frame_equal(
-            whole.sort_values(["id_a", "id_b"]).reset_index(drop=True),
-            split.sort_values(["id_a", "id_b"]).reset_index(drop=True),
+            whole.sort_values(key).reset_index(drop=True),
+            split.sort_values(key).reset_index(drop=True),
             check_dtype=False)
 
 

@@ -94,8 +94,7 @@ def test_verify_stage_single_pair_exchange(spark, cfg):
     prints = spark.createDataFrame(
         [(f"i{k}", k, (k * 37) % 91, k % 7, k % 5) for k in range(300)],
         "image_id string, iid long, hash long, t1 int, f1 int")
-    v = run_verify(landmark_hits(prints, cfg, numeric_ids=True), cfg,
-                   numeric_ids=True)
+    v = run_verify(landmark_hits(prints, cfg, numeric_ids=True), cfg)
     p = plan(v)
     tree = p.split("\n\n", 1)[0]  # the indented operator tree only
     assert tree.count("MapInPandas") == 1
@@ -151,20 +150,31 @@ def test_verify_exchanges_coalesced_by_aqe(spark, cfg):
     AQE sizes them at runtime: every mapInPandas task pays a fixed Python
     worker start, and a fixed count would make even a tiny probe pay it
     that many times. The final plan must read the pair-key exchange
-    through a coalesced AQEShuffleRead."""
+    through a coalesced AQEShuffleRead — for the pipeline's int64 hits
+    and for the monitor's string-id hits alike — and the verified id
+    columns keep the input's type."""
+    import pyspark.sql.types as T
+
     from panako_spark.plans.inspect import plan
     from panako_spark.stages.verify import run_tile_verify, run_verify
 
     hits = spark.createDataFrame(
         [(k % 13, 100 + k % 17, k * 7919) for k in range(400)],
         "id_a long, id_b long, tf long")
+    str_hits = hits.select(F.concat(F.lit("q"), "id_a").alias("id_a"),
+                           F.concat(F.lit("r"), "id_b").alias("id_b"),
+                           "tf")
     tile_hits = spark.createDataFrame(
         [(k % 13, 100 + k % 17, k % 3, k * 7919) for k in range(400)],
         "id_q long, id_r long, tile_id int, tf long")
-    for v in (run_verify(hits, cfg, numeric_ids=True),
+    for v in (run_verify(hits, cfg), run_verify(str_hits, cfg),
               run_tile_verify(tile_hits, cfg)):
         v.collect()  # finalize the AQE plan
         p = plan(v, "simple").split("Initial Plan", 1)[0]
         assert "REPARTITION_BY_NUM" not in p, p
         assert "REPARTITION_BY_COL" in p, p
         assert "AQEShuffleRead coalesced" in p, p
+    for h, id_type in ((hits, T.LongType()), (str_hits, T.StringType())):
+        out = run_verify(h, cfg).schema
+        assert out["id_a"].dataType == id_type
+        assert out["id_b"].dataType == id_type

@@ -202,7 +202,7 @@ def test_verify_result_invariant_to_shuffle_partitions(spark, cfg,
 
     def verified():
         hits = spark.createDataFrame(rows, schema)
-        v = (run_verify(hits, cfg, numeric_ids=True) if stage == "landmark"
+        v = (run_verify(hits, cfg) if stage == "landmark"
              else run_tile_verify(hits, cfg))
         return sorted(tuple(r) for r in v.collect())
 
@@ -223,3 +223,15 @@ def test_verify_result_invariant_to_shuffle_partitions(spark, cfg,
     assert runs[0], "fixture produced no verified rows"
     assert runs[1] == runs[0]
     assert runs[2] == runs[0]
+
+
+def test_landmark_hits_refuses_string_ids(spark, cfg):
+    """The landmark channel probes on int64 iids only; the string-id arm
+    is gone, so asking for it must fail loudly, not run a second plan."""
+    from panako_spark.stages.candidates import landmark_hits
+
+    prints = spark.createDataFrame(
+        [("i0", 0, 5, 1, 1)],
+        "image_id string, iid long, hash long, t1 int, f1 int")
+    with pytest.raises(ValueError, match="iid"):
+        landmark_hits(prints, cfg, numeric_ids=False)
